@@ -99,7 +99,7 @@ class DdlExecMixin:
 
     # A materialized view is a managed parquet table whose defining
     # SELECT is stored (base64, to dodge DDL string escaping) in table
-    # properties; REFRESH re-runs it through the same staged-swap path
+    # properties; REFRESH re-runs it through the same snapshot rewrite
     # DML uses. The OLAP-engine face of the hierarchical-rollup pattern
     # (plans/timeseries.py): materialize once, re-serve cheaply,
     # recompute on demand. Beyond the reference (1105s there).
@@ -184,9 +184,7 @@ class DdlExecMixin:
         t = self.spark.table(q)
         from ebike_spark.engine import dml
 
-        dml._rewrite(
-            self.spark, q, t.repartitionByRange(*cols).sortWithinPartitions(*cols)
-        )
+        dml._rewrite(q, t.repartitionByRange(*cols).sortWithinPartitions(*cols))
         self.spark.sql(
             f"ALTER TABLE {bq(q)} SET TBLPROPERTIES "
             f"('{self._PROP_CLUSTER}{name}' = '{','.join(cols)}')"
@@ -334,7 +332,7 @@ class DdlExecMixin:
             f.dataType for f in cur.schema.fields
         ]:
             raise unsupported("REFRESH with a changed result schema")
-        dml._rewrite(self.spark, q, src)
+        dml._rewrite(q, src)
         return EngineResult("count", affected=self.spark.table(q).count())
 
     def _drop_matview(self, sql: str) -> EngineResult:
@@ -377,7 +375,7 @@ class DdlExecMixin:
           introduced by external writers). Reports MySQL's row shape.
         - ANALYZE TABLE → ANALYZE TABLE COMPUTE STATISTICS (row counts /
           sizes into the catalog — what feeds join-strategy choices).
-        - OPTIMIZE TABLE → compact the table's data files: one staged
+        - OPTIMIZE TABLE → compact the table's data files: one snapshot
           rewrite through the DML swap path (the io_compact_small_files
           maintenance shape applied to an engine table).
 
@@ -399,9 +397,7 @@ class DdlExecMixin:
                 continue
             if kw == "OPTIMIZE":
                 t = self.spark.table(q)
-                dml._rewrite(
-                    self.spark, q, t.coalesce(max(1, t.rdd.getNumPartitions() // 8))
-                )
+                dml._rewrite(q, t.coalesce(max(1, t.rdd.getNumPartitions() // 8)))
                 rows.append((disp, "optimize", "status", "OK"))
                 continue
             # CHECK TABLE: re-validate declared constraints at rest
@@ -557,8 +553,7 @@ class DdlExecMixin:
             self.spark.sql(f"DROP TABLE IF EXISTS {bq(stage)}")
             _bump_sys_schema_epoch()
             raise
-        # phase 2 — swap (same crash window as _recreate_table's,
-        # documented). Once the original is dropped the stage is the ONLY
+        # phase 2 — swap. Once the original is dropped the stage is the ONLY
         # copy of the data: a failed RENAME must PRESERVE it, never drop
         # it (review finding: the old single rollback handler deleted the
         # survivor on a transient rename failure — total data loss).
@@ -729,26 +724,21 @@ class DdlExecMixin:
         return EngineResult("count", affected=0)
 
     def _recreate_table(self, qualified: str, df: DataFrame, ebike_props: dict[str, str]) -> None:
-        """Stage-swap recreate for schema evolution parquet v1 can't do
-        in place (type/order change, column drop): write the new shape
-        to a stage table, drop, recreate with the given ebike.*
-        properties, reload, drop the stage. Shared by DROP/MODIFY/
-        CHANGE COLUMN."""
-        db, _, _ = qualified.rpartition(".")
-        import uuid as _uuid
-
-        stage = f"{db}.__ebike_stage_{_uuid.uuid4().hex[:12]}"
-        df.write.saveAsTable(stage)
-        try:
+        """Recreate for schema evolution parquet v1 can't do in place
+        (type/order change, column drop): snapshot the new shape
+        (dml.snapshot), drop, recreate with the given ebike.*
+        properties, write the snapshot back. Shared by DROP/MODIFY/
+        CHANGE COLUMN. Every read of the old table completes before the
+        DROP, so a failure while computing the new shape leaves the table
+        unchanged."""
+        with dml.snapshot(df) as (image, _):
             self.spark.sql(f"DROP TABLE {qualified}")
             cols_ddl = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields)
             props_ddl = ", ".join(f"'{k}' = '{v}'" for k, v in ebike_props.items()) or "'ebike.not_null' = ''"
             self.spark.sql(
                 f"CREATE TABLE {qualified} ({cols_ddl}) USING parquet TBLPROPERTIES ({props_ddl})"
             )
-            self.spark.table(stage).write.insertInto(qualified, overwrite=True)
-        finally:
-            self.spark.sql(f"DROP TABLE IF EXISTS {stage}")
+            image.write.insertInto(qualified, overwrite=True)
         _bump_sys_schema_epoch()
 
     def _modify_column(
@@ -763,7 +753,7 @@ class DdlExecMixin:
     ) -> EngineResult:
         """ALTER TABLE MODIFY/CHANGE COLUMN: retype (strict-mode cast —
         a non-NULL value that doesn't convert is 1366, as MySQL strict),
-        optionally rename, via the stage-swap recreate. Key/cluster/
+        optionally rename, via the snapshot recreate. Key/cluster/
         auto-increment markers follow the rename. Divergence from
         MySQL's full-redefinition semantics, documented: attributes not
         restated in the clause (AUTO_INCREMENT, key membership) are

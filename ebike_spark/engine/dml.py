@@ -10,10 +10,10 @@ equivalent keeps the *rewrite* idea but makes it set-oriented:
   constant expressions, like the reference's physical-expr fold,
   insert.rs:113-164), constraint-checked, then appended.
 - UPDATE: one pass computing when(cond, new, old) per assigned column,
-  written out via a staging table then INSERT OVERWRITE (write-new-
-  then-swap). No per-row point writes — the same plan shape works on a
-  1000-executor cluster.
-- DELETE: filter(NOT cond) + overwrite.
+  snapshotted in Spark's block manager, then written back once with
+  INSERT OVERWRITE (see :func:`snapshot`). No per-row point writes —
+  the same plan shape works on a 1000-executor cluster.
+- DELETE: filter(NOT cond) + overwrite, through the same snapshot.
 
 Constraint enforcement (PRIMARY/UNIQUE) is an anti-join against the
 existing table plus an intra-batch duplicate check — this *fixes* the
@@ -23,7 +23,7 @@ reference's bug of not maintaining index entries on update/delete
 
 from __future__ import annotations
 
-import uuid
+from contextlib import contextmanager
 from functools import reduce
 from operator import and_, or_
 
@@ -217,7 +217,10 @@ def guarded_cast_col(raw_expr, spark_type: str, col: str):
 
 def _values_df(spark: SparkSession, ins: Insert, col_types: list[tuple[str, str]]) -> DataFrame:
     """Evaluate VALUES rows as constant expressions via a literal
-    SELECT; every declared-type cast is strict (guarded_cast_sql)."""
+    SELECT; every declared-type cast is strict (guarded_cast_sql). One
+    partition in statement order: :func:`insert` snapshots it, so the
+    checks and the write read the same rows and the write adds one
+    file, not one per row."""
     names = [n for n, _ in col_types]
     types = dict(col_types)
     target = ins.columns or names
@@ -274,7 +277,7 @@ def _values_df(spark: SparkSession, ins: Insert, col_types: list[tuple[str, str]
         selects.append(
             f"SELECT {', '.join(outer)} FROM (SELECT {', '.join(inner)})"
         )
-    return spark.sql(" UNION ALL ".join(selects))
+    return spark.sql(" UNION ALL ".join(selects)).coalesce(1)
 
 
 def _check_constraints(
@@ -373,30 +376,32 @@ def insert(
 ) -> int:
     qualified = catalog.qualify(ins.table, current_db)
     catalog.require_table(qualified)
-    df = _values_df(spark, ins, catalog.column_types(qualified))
-    ai = catalog.auto_increment_col(qualified)
-    if ai is not None:
-        df, first_id = _mint_auto_increment(
-            spark, qualified, df, ai, dict(catalog.column_types(qualified))[ai]
-        )
-        if first_id is not None and session is not None:
-            # MySQL LAST_INSERT_ID(): first minted id of the batch
-            session["last_insert_id"] = first_id
-    if ins.replace:
-        return _replace(spark, catalog, qualified, df, ins)
-    if ins.on_dup_update is not None:
-        return _upsert(spark, catalog, qualified, df, ins)
-    if ins.ignore:
-        return _insert_ignore(spark, catalog, qualified, df)
-    _check_constraints(spark, catalog, qualified, df)
-    if catalog.has_rowid(qualified):
-        # row identity materializes at INSERT (reference: uuid per row,
-        # meta_def.rs:385-398) — stable for the row's lifetime. Align to
-        # the PHYSICAL column order: insertInto is positional and ALTER
-        # ADD COLUMN places later columns after rowid.
-        df = df.withColumn(ROWID, F.expr("uuid()")).select(*spark.table(qualified).columns)
-    df.write.insertInto(qualified, overwrite=False)
-    return len(ins.rows)
+    # the VALUES rows are computed once: every check and the write read
+    # the snapshot
+    with snapshot(_values_df(spark, ins, catalog.column_types(qualified))) as (df, _):
+        ai = catalog.auto_increment_col(qualified)
+        if ai is not None:
+            df, first_id = _mint_auto_increment(
+                spark, qualified, df, ai, dict(catalog.column_types(qualified))[ai]
+            )
+            if first_id is not None and session is not None:
+                # MySQL LAST_INSERT_ID(): first minted id of the batch
+                session["last_insert_id"] = first_id
+        if ins.replace:
+            return _replace(spark, catalog, qualified, df, ins)
+        if ins.on_dup_update is not None:
+            return _upsert(spark, catalog, qualified, df, ins)
+        if ins.ignore:
+            return _insert_ignore(spark, catalog, qualified, df)
+        _check_constraints(spark, catalog, qualified, df)
+        if catalog.has_rowid(qualified):
+            # row identity materializes at INSERT (reference: uuid per row,
+            # meta_def.rs:385-398) — stable for the row's lifetime. Align to
+            # the PHYSICAL column order: insertInto is positional and ALTER
+            # ADD COLUMN places later columns after rowid.
+            df = df.withColumn(ROWID, F.expr("uuid()")).select(*spark.table(qualified).columns)
+        df.write.insertInto(qualified, overwrite=False)
+        return len(ins.rows)
 
 
 def _upsert(spark: SparkSession, catalog: Catalog, qualified: str, new_df, ins: Insert) -> int:
@@ -497,18 +502,12 @@ def _upsert(spark: SparkSession, catalog: Catalog, qualified: str, new_df, ins: 
     n_new = to_insert.count()
     final = updated.unionByName(to_insert)
     # post-image integrity: an assignment that writes a key column can
-    # collide rows that didn't collide before — validate before the swap
-    # (same guard as update(); the reference corrupts its indexes here)
-    for key_name, cols in keys:
-        if not set(cols) & set(assigned):
-            continue
-        cand = final
-        if key_name != "PRIMARY":
-            cand = cand.where(reduce(and_, [F.col(c).isNotNull() for c in cols]))
-        dup = cand.groupBy(*cols).count().where(F.col("count") > 1).limit(1).collect()
-        if dup:
-            raise duplicate_entry("-".join(str(dup[0][c]) for c in cols), key_name)
-    _rewrite(spark, qualified, final)
+    # collide rows that didn't collide before — validate the snapshot
+    # before the overwrite (same guard as update(); the reference
+    # corrupts its indexes here)
+    with snapshot(final) as (image, _):
+        recheck_keys_after_update(spark, catalog, qualified, image, set(assigned))
+        image.write.insertInto(qualified, overwrite=True)
     return n_new + 2 * n_changed
 
 
@@ -734,45 +733,58 @@ def _replace(spark: SparkSession, catalog: Catalog, qualified: str, new_df, ins:
         to_insert = to_insert.withColumn(ROWID, F.expr("uuid()")).select(
             *existing.columns
         )
-    _rewrite(spark, qualified, survivors.unionByName(to_insert))
+    _rewrite(qualified, survivors.unionByName(to_insert))
     # MySQL affected-rows: 1 per batch row inserted (including ones a
     # later batch row then replaced) + 1 per deleted row (stored or
     # earlier-batch)
     return len(ins.rows) + n_deleted + intra_deleted
 
 
-def _stage(spark: SparkSession, qualified: str, new_df: DataFrame) -> str:
-    """Materialize a rewritten post-image to a staging table in the
-    target's database; returns the stage name. Split out of _rewrite so
-    multi-table statements can stage EVERY target before swapping any
-    (two-phase: all pre-image reads complete before the first commit)."""
-    db, _, _ = qualified.rpartition(".")
-    stage = f"{db}.__ebike_stage_{uuid.uuid4().hex[:12]}"
-    new_df.write.saveAsTable(stage)
-    return stage
+# Flag column a rewrite's scan computes beside the post-image: TRUE on
+# the rows the statement changes (UPDATE) or removes (DELETE), so the
+# affected count reads the snapshot instead of scanning the table again.
+CHANGED = "__ebike_changed"
 
 
-def _swap(spark: SparkSession, qualified: str, stage: str) -> None:
-    """INSERT OVERWRITE the target from its stage (the commit half of
-    the stage-swap protocol; shared so multi-table statements and
-    _rewrite can never drift apart)."""
-    spark.table(stage).write.insertInto(qualified, overwrite=True)
+@contextmanager
+def snapshot(df: DataFrame, flag: str | None = None):
+    """Compute ``df`` once into Spark's block manager and yield
+    ``(snapshot, n)``: a frame over the stored rows whose lineage no
+    longer reads any table, and its row count — or, given ``flag``, the
+    count of rows where that boolean column is TRUE. The count is the
+    job that fills the snapshot, so it costs no extra pass.
 
+    The snapshot is a localCheckpoint: every later action (key checks,
+    the INSERT OVERWRITE of the table the rows came from) reads the
+    stored blocks, and a table refresh cannot invalidate it the way it
+    drops a persist()ed plan. Its storage level is MEMORY_AND_DISK, so
+    an image larger than the free heap spills to SPARK_LOCAL_DIRS.
 
-def _drop_stage(spark: SparkSession, stage: str) -> None:
-    spark.sql(f"DROP TABLE IF EXISTS {stage}")
-
-
-def _rewrite(spark: SparkSession, qualified: str, new_df: DataFrame) -> None:
-    """Write-new-then-swap: materialize the rewritten table to a staging
-    table, then INSERT OVERWRITE the target from it (can't overwrite a
-    table while scanning it). Staging lives in the same metastore so a
-    crash leaves either the old data or a complete new copy."""
-    stage = _stage(spark, qualified, new_df)
+    The checkpoint is marked lazily and filled inside the ``try`` so
+    that a failing fill (a strict-cast 1366, say) still releases it: an
+    eager localCheckpoint that raises leaves its RDD persisted with no
+    handle to release it by. The blocks are released on every exit."""
+    snap = df.localCheckpoint(eager=False)
     try:
-        _swap(spark, qualified, stage)
+        n = (snap.where(F.col(flag)) if flag else snap).count()
+        yield snap, n
     finally:
-        _drop_stage(spark, stage)
+        snap._jdf.logicalPlan().rdd().unpersist(False)
+
+
+def _rewrite(qualified: str, new_df: DataFrame) -> None:
+    """Replace the table's rows with ``new_df``, which may read the table
+    itself: snapshot the post-image, then INSERT OVERWRITE from the
+    snapshot (a table can't be overwritten while the write scans it).
+
+    Guarantee: the snapshot completes every read of the pre-image before
+    the overwrite starts, so a failure up to that point leaves the table
+    unchanged. The overwrite itself is not atomic: it deletes the old
+    files, then writes the new ones, and a crash between the two loses
+    the rows (the catalog is in-memory, so no copy would outlive the
+    process anyway)."""
+    with snapshot(new_df) as (image, _):
+        image.write.insertInto(qualified, overwrite=True)
 
 
 def update(spark: SparkSession, catalog: Catalog, upd: Update, current_db: str) -> int:
@@ -808,7 +820,7 @@ def update(spark: SparkSession, catalog: Catalog, upd: Update, current_db: str) 
     # column takes a new value), not matched rows. The new value goes
     # through the STRICT guard here too, wrapped in a lazy CASE on the
     # match condition: a bad value on a matched row must raise 1366
-    # even when the old value is NULL (an unguarded pre-count would
+    # even when the old value is NULL (an unguarded change flag would
     # call NULL→NULL "unchanged" and return success), while rows the
     # WHERE never matches must not evaluate the assignment at all.
     cond_safe = F.coalesce(cond, F.lit(False))
@@ -818,12 +830,9 @@ def update(spark: SparkSession, catalog: Catalog, upd: Update, current_db: str) 
         .eqNullSafe(F.col(name))
         for name, expr in assigned.items()
     ]
-    affected = t.where(cond_safe & reduce(or_, change_terms)).count()
-    if affected == 0:
-        return 0
     cols = []
     # project the TABLE's columns only (the LIMIT path joined a helper
-    # __upd_rid column onto t that must not reach the staged rewrite)
+    # __upd_rid column onto t that must not reach the rewrite)
     for name in spark.table(qualified).columns:
         if name in assigned:
             new_val = guarded_cast_col(
@@ -832,9 +841,13 @@ def update(spark: SparkSession, catalog: Catalog, upd: Update, current_db: str) 
             cols.append(F.when(cond, new_val).otherwise(F.col(name)).alias(name))
         else:
             cols.append(F.col(name))
-    new_df = t.select(*cols)
-    recheck_keys_after_update(spark, catalog, qualified, new_df, set(assigned))
-    _rewrite(spark, qualified, new_df)
+    flagged = t.select(*cols, (cond_safe & reduce(or_, change_terms)).alias(CHANGED))
+    with snapshot(flagged, CHANGED) as (snap, affected):
+        if affected == 0:
+            return 0
+        image = snap.drop(CHANGED)
+        recheck_keys_after_update(spark, catalog, qualified, image, set(assigned))
+        image.write.insertInto(qualified, overwrite=True)
     return affected
 
 
@@ -893,10 +906,10 @@ def delete(spark: SparkSession, catalog: Catalog, dele: Delete, current_db: str)
     cond_true = F.coalesce(cond, F.lit(False))
     if dele.limit is not None:
         return _delete_limited(spark, catalog, qualified, t, cond_true, dele)
-    affected = t.where(cond_true).count()
-    if affected == 0:
-        return 0
-    _rewrite(spark, qualified, t.where(~cond_true))
+    with snapshot(t.withColumn(CHANGED, cond_true), CHANGED) as (snap, affected):
+        if affected == 0:
+            return 0
+        snap.where(~F.col(CHANGED)).drop(CHANGED).write.insertInto(qualified, overwrite=True)
     return affected
 
 
@@ -922,9 +935,9 @@ def _delete_limited(
     if affected == 0:
         return 0
     # the using-join hoists rowid to the front; restore physical order
-    # (the staged rewrite's insertInto is positional)
+    # (the rewrite's insertInto is positional)
     survivors = t.join(doomed, ROWID, "left_anti").select(*t.columns)
-    _rewrite(spark, qualified, survivors)
+    _rewrite(qualified, survivors)
     return affected
 
 

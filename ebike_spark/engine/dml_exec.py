@@ -7,8 +7,12 @@ itself lives in engine/dml.py as before."""
 from __future__ import annotations
 
 import re
+from contextlib import ExitStack
+from functools import reduce
+from operator import or_ as _or
 
 import pyspark.sql.functions as F
+from pyspark.sql import Window
 
 from ebike_spark.engine import dml
 from ebike_spark.engine.catalog import bq
@@ -318,11 +322,11 @@ class DmlExecMixin:
 
         Set-oriented plan: ONE join computes (rowid, new values) for
         every matched row of every assigned table against the shared
-        PRE-image; the frame is snapshotted via localCheckpoint so
-        rewriting the first target cannot leak its post-image into the
-        second target's values — MySQL processes rows one at a time and later
-        rows CAN observe earlier in-statement writes, an
-        order-dependent behavior with no deterministic set-oriented
+        PRE-image; every target's post-image is snapshotted before the
+        first overwrite, so rewriting the first target cannot leak its
+        post-image into the second target's values — MySQL processes
+        rows one at a time and later rows CAN observe earlier
+        in-statement writes, an order-dependent behavior with no deterministic set-oriented
         equivalent; this engine pins snapshot semantics (every
         assignment sees the statement's start state), the same
         divergence documented for single-table UPDATE self-references.
@@ -332,14 +336,9 @@ class DmlExecMixin:
         assigned through TWO aliases merges into one post-image
         (last assignment in statement order wins per column where
         both aliases match — see the grouping comment below); each
-        post-image lands via the same staged rewrite, changed-row
-        accounting, and key re-check as the single-table path. No
-        driver-side row loop at any join size."""
-        from functools import reduce
-        from operator import or_ as _or
-
-        from pyspark.sql import Window
-
+        post-image lands via the same snapshot and overwrite,
+        changed-row accounting, and key re-check as the single-table
+        path. No driver-side row loop at any join size."""
         from ebike_spark.engine.parser import split_top_level
 
         assigns: list[tuple[str | None, str, str]] = []  # (alias, col, rhs)
@@ -425,20 +424,19 @@ class DmlExecMixin:
             + (f" WHERE {where}" if where else "")
         )
         src = self.spark.sql(self._fix_select(sel, datetime_fns=False))
+        with ExitStack() as snapshots:
+            return self._update_join_images(src, targets, snapshots)
+
+    def _update_join_images(self, src, targets: list[dict], snapshots: ExitStack) -> EngineResult:
+        """Compute, check and write the post-image of every physical
+        table a multi-table UPDATE assigns. Every snapshot enters
+        ``snapshots``, which releases them when the statement ends."""
         if len(targets) > 1:
-            # snapshot the pre-image join BEFORE any table rewrites.
-            # localCheckpoint (eager), not persist(): rewriting the
-            # first target refreshes its table, and Spark invalidates
-            # every CACHED plan that reads a refreshed table — a
-            # persisted frame would silently recompute the second
-            # target's values from the first target's POST-image.
-            # Checkpointing cuts the lineage entirely, so the snapshot
-            # cannot be recomputed from anything. Bounded by matched
-            # rows x assigned columns, spread across executor storage.
-            src = src.localCheckpoint(eager=True)
+            # the join feeds several targets: compute it once
+            src, _ = snapshots.enter_context(dml.snapshot(src))
         total = 0
-        # Aliases of the SAME physical table merge into ONE staged
-        # post-image: MySQL permits `UPDATE t a JOIN t b ... SET
+        # Aliases of the SAME physical table merge into ONE post-image:
+        # MySQL permits `UPDATE t a JOIN t b ... SET
         # a.x=..., b.y=...` but its row-level outcome is processing-
         # order-dependent; this engine pins a deterministic rule —
         # every assignment sees the statement-start snapshot, and when
@@ -455,7 +453,7 @@ class DmlExecMixin:
                 gindex[t["qualified"]] = len(groups)
                 groups.append((t["qualified"], []))
             groups[gindex[t["qualified"]]][1].append((k, t))
-        staged = []  # (qualified, new_df) per PHYSICAL table
+        images = []  # (qualified, post-image snapshot) per PHYSICAL table
         for qualified, members in groups:
             tb = self.spark.table(qualified)
             types = members[0][1]["types"]
@@ -503,41 +501,29 @@ class DmlExecMixin:
                 _or,
                 [~new_vals[c].eqNullSafe(F.col(c)) for c in new_vals],
             )
-            affected = joined.where(changed).count()
-            if affected == 0:
-                continue
-            total += affected
             out_cols = [
                 new_vals[name].alias(name)
                 if name in new_vals
                 else tb[name].alias(name)
                 for name in tb.columns
             ]
-            new_df = joined.select(*out_cols)
+            flagged = joined.select(*out_cols, changed.alias(dml.CHANGED))
+            snap, affected = snapshots.enter_context(dml.snapshot(flagged, dml.CHANGED))
+            if affected == 0:
+                continue
+            total += affected
+            image = snap.drop(dml.CHANGED)
             dml.recheck_keys_after_update(
-                self.spark, self.catalog, qualified, new_df, set(new_vals)
+                self.spark, self.catalog, qualified, image, set(new_vals)
             )
-            staged.append((qualified, new_df))
-        # All key re-checks passed against pre-images. Two-phase land:
-        # STAGE every post-image first (the data-sized writes — every
-        # pre-image read completes before anything commits), then swap
-        # each target from its durable stage. Residual window: a crash
-        # BETWEEN swaps leaves earlier targets committed — the
-        # cross-table analogue of the documented single-table
-        # stage-swap window (a parquet engine has no multi-table
-        # transaction to close it); the stages being durable tables
-        # means no snapshot recompute is ever needed to finish a swap.
-        staged_tables: list[tuple[str, str]] = []
-        try:
-            for qualified, new_df in staged:
-                staged_tables.append(
-                    (qualified, dml._stage(self.spark, qualified, new_df))
-                )
-            for qualified, stage in staged_tables:
-                dml._swap(self.spark, qualified, stage)
-        finally:
-            for _, stage in staged_tables:
-                dml._drop_stage(self.spark, stage)
+            images.append((qualified, image))
+        # Every post-image is snapshotted and key-checked, so every read
+        # of a pre-image has completed: a failure up to here leaves all
+        # the tables unchanged. Only then does the first overwrite start.
+        # A crash BETWEEN overwrites leaves the earlier targets written —
+        # a parquet engine has no multi-table transaction to close that.
+        for qualified, image in images:
+            image.write.insertInto(qualified, overwrite=True)
         return EngineResult("count", affected=total)
 
     def _delete(self, sql: str) -> EngineResult:
@@ -598,7 +584,6 @@ class DmlExecMixin:
             return EngineResult("count", affected=0)
         t = self.spark.table(qualified)
         dml._rewrite(
-            self.spark,
             qualified,
             t.join(doomed, t[dml.ROWID] == doomed["__del_rid"], "left_anti"),
         )

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 
@@ -35,7 +36,9 @@ def _cpus() -> int:
 # pinned -Xms below can never diverge (a mismatch refuses to start the
 # JVM). A bare number is normalized to MiB up front — the raw launcher
 # pass-through means an unitless value would otherwise reach the JVM as
-# BYTES and kill startup. SPARK_GRAFT_PIN_HEAP=0 disables the eager pin.
+# BYTES and kill startup. SPARK_GRAFT_DRIVER_MEM is used as given; unset,
+# the heap is sized to the host (_default_heap_mb).
+# SPARK_GRAFT_PIN_HEAP=0 disables the eager pin.
 def _normalize_heap(mem: str) -> str:
     """Normalize a Spark-legal memory string to a JVM-legal -Xms/-Xmx
     value. Spark's JavaUtils accepts 1g/1gb/1G/1GB (and k/m/t tiers);
@@ -58,7 +61,64 @@ def _normalize_heap(mem: str) -> str:
     return m
 
 
-_DRIVER_MEM = _normalize_heap(os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+def _host_mem_mb() -> int:
+    """MiB this process can still commit: MemAvailable, or the cgroup
+    (v2) ``memory.max`` when that is lower."""
+    try:
+        with open("/proc/meminfo") as f:
+            avail = next(
+                int(line.split()[1]) // 1024 for line in f if line.startswith("MemAvailable:")
+            )
+    except (OSError, StopIteration):
+        avail = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    try:
+        with open("/sys/fs/cgroup/memory.max") as f:
+            limit = f.read().strip()
+        if limit.isdigit():
+            avail = min(avail, int(limit) // 2**20)
+    except OSError:
+        pass
+    return avail
+
+
+def _default_heap_mb(avail_mb: int) -> int:
+    """The heap when SPARK_GRAFT_DRIVER_MEM is unset: half of what the
+    host can give, in whole 256 MiB steps, at most 24 GiB (the size the
+    r13 tuning measured). The other half is headroom for the Python
+    workers and the JVM's off-heap memory (metaspace, code cache,
+    netty and Arrow buffers)."""
+    return min(24 * 1024, avail_mb // 2 // 256 * 256)
+
+
+def _heap_mb(mem: str) -> int:
+    """MiB in a _normalize_heap result."""
+    return int(mem[:-1]) * {"k": 1, "m": 1024, "g": 1024**2, "t": 1024**3}[mem[-1].lower()] // 1024
+
+
+def _check_heap_fits(mem: str, avail_mb: int) -> None:
+    """Fail before the JVM launches, with a message that says why, when
+    the pinned heap cannot be committed: otherwise the JVM dies at
+    startup and leaves only an hs_err log."""
+    if _heap_mb(mem) < 256:
+        raise RuntimeError(
+            f"driver heap {mem} is below 256m: this host can give only {avail_mb} MiB;"
+            " set SPARK_GRAFT_DRIVER_MEM to a heap of at least 256m"
+        )
+    if _PIN_HEAP and _heap_mb(mem) > avail_mb:
+        raise RuntimeError(
+            f"the pinned driver heap (-Xms{mem}) exceeds the {avail_mb} MiB this host"
+            " can give (MemAvailable or the cgroup memory.max); lower"
+            " SPARK_GRAFT_DRIVER_MEM, or set SPARK_GRAFT_PIN_HEAP=0 to commit it lazily"
+        )
+
+
+def _driver_mem(avail_mb: int) -> str:
+    """SPARK_GRAFT_DRIVER_MEM as given, else the host-sized default."""
+    return _normalize_heap(
+        os.environ.get("SPARK_GRAFT_DRIVER_MEM") or f"{_default_heap_mb(avail_mb)}m"
+    )
+
+
 _PIN_HEAP = os.environ.get("SPARK_GRAFT_PIN_HEAP", "1") != "0"
 
 
@@ -73,6 +133,10 @@ def _append_java_options(builder_conf_value: str | None, extra: str) -> str:
 def build_conf(builder: SparkSession.Builder, cpus: int | None = None) -> SparkSession.Builder:
     """Apply this engine's configuration to any SparkSession builder."""
     n = cpus or _cpus()
+    avail_mb = _host_mem_mb()
+    driver_mem = _driver_mem(avail_mb)
+    if SparkContext._active_spark_context is None:  # this call may launch the JVM
+        _check_heap_fits(driver_mem, avail_mb)
     # read any options the caller already set so the JVM-flag configs
     # below APPEND rather than clobber (Builder keeps them in _options;
     # fall back to empty when the attribute moves)
@@ -95,7 +159,7 @@ def build_conf(builder: SparkSession.Builder, cpus: int | None = None) -> SparkS
         # must stay inside whole-stage codegen; the 100-field default
         # silently drops them to interpreted mode (~3× slower).
         .config("spark.sql.codegen.maxFields", "400")
-        .config("spark.driver.memory", _DRIVER_MEM)
+        .config("spark.driver.memory", driver_mem)
         # Pin and pre-touch the heap (Xms = Xmx, AlwaysPreTouch): on
         # this microVM host (kernel 6.18.5-fc), pages the JVM gives
         # back to the guest kernel are reported free to the hypervisor,
@@ -113,13 +177,14 @@ def build_conf(builder: SparkSession.Builder, cpus: int | None = None) -> SparkS
         # sizing -Xms to spark.executor.memory in executor options at
         # deploy time (AlwaysPreTouch alone is set below). The one-time
         # local cost is ~10 s of startup before any timing begins;
-        # SPARK_GRAFT_PIN_HEAP=0 opts out (e.g. hosts without 24 GB to
-        # commit eagerly — the lazy -Xmx-only heap worked there).
+        # SPARK_GRAFT_PIN_HEAP=0 opts out (the lazy -Xmx-only heap).
+        # A pin larger than the host can commit fails fast in
+        # _check_heap_fits instead of killing the JVM at startup.
         .config(
             "spark.driver.extraJavaOptions",
             _append_java_options(
                 prior.get("spark.driver.extraJavaOptions"),
-                (f"-Xms{_DRIVER_MEM} " if _PIN_HEAP else "")
+                (f"-Xms{driver_mem} " if _PIN_HEAP else "")
                 + "-XX:+AlwaysPreTouch",
             ),
         )
@@ -162,8 +227,8 @@ def tune_runtime(spark: SparkSession) -> None:
         conf.set("spark.sql.codegen.maxFields", "400")
     if conf.get("spark.sql.shuffle.partitions", "200") == "200":
         conf.set("spark.sql.shuffle.partitions", str(_cpus()))
-    # default 10MB is too conservative for dimension tables on a box
-    # with 128 GiB; matches the builder conf
+    # default 10MB is too conservative for dimension tables; matches
+    # build_conf
     if conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760b") in ("10485760b", "10485760"):
         conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
 

@@ -1867,15 +1867,16 @@ def test_multi_table_update_assigns_several_tables(eng):
     ga = {x["id"]: x["v"] for x in eng.execute("SELECT id, v FROM swapa").rows()}
     assert ga == {1: 2.0, 2: 2.0, 3: 2.0}
     # key re-check still guards EVERY assigned table (1062 on table 2)
+    before = {t: _table_rows(eng, t) for t in ("swapa", "swapb")}
     with pytest.raises(EbikeError) as ei:
         eng.execute(
             "UPDATE swapa a JOIN swapb b ON a.id = b.id "
             "SET a.v = 0, b.id = 7"
         )
     assert ei.value.code == 1062
-    # ...and a failed re-check lands NOTHING (all-or-nothing statement)
-    ga = {x["id"]: x["v"] for x in eng.execute("SELECT id, v FROM swapa").rows()}
-    assert ga[1] != 0.0
+    # ...and a failed re-check lands NOTHING in either table, though the
+    # first target's post-image passed its own check
+    assert {t: _table_rows(eng, t) for t in ("swapa", "swapb")} == before
 
 
 def test_mysql_datetime_format_rewrites(eng):
@@ -2340,6 +2341,111 @@ def test_variables_view_is_per_reader_across_engines(eng):
     assert [r[0] for r in eng.execute(q).rows()] == ["engine_a"]
 
 
+def _table_rows(eng, table: str) -> list[tuple]:
+    return sorted(tuple(r) for r in eng.spark.table(table).drop("rowid").collect())
+
+
+def test_values_insert_adds_one_file(eng):
+    """The VALUES batch is one snapshotted partition: a 10-row INSERT
+    adds one data file to the table, not one per row."""
+    eng.execute("CREATE TABLE vfile (k INT NOT NULL, v CHAR, PRIMARY KEY (k))")
+    eng.execute("INSERT INTO vfile VALUES (0, 'seed')")
+    before = set(eng.spark.table("vfile").inputFiles())
+    rows = ", ".join(f"({i}, 'v{i}')" for i in range(1, 11))
+    assert eng.execute(f"INSERT INTO vfile VALUES {rows}").affected == 10
+    added = set(eng.spark.table("vfile").inputFiles()) - before
+    assert len(added) == 1
+    assert eng.execute("SELECT count(*) AS n FROM vfile").rows()[0]["n"] == 11
+
+
+@pytest.fixture()
+def writes(monkeypatch):
+    """Count DataFrameWriter.insertInto(overwrite=True) and saveAsTable
+    calls by target table."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    calls: dict[str, list[str]] = {"overwrite": [], "saveAsTable": []}
+    insert_into, save_as_table = DataFrameWriter.insertInto, DataFrameWriter.saveAsTable
+
+    def counting_insert_into(self, tableName, overwrite=None):
+        if overwrite:
+            calls["overwrite"].append(tableName.rpartition(".")[2])
+        return insert_into(self, tableName, overwrite)
+
+    def counting_save_as_table(self, name, *args, **kwargs):
+        calls["saveAsTable"].append(name)
+        return save_as_table(self, name, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "insertInto", counting_insert_into)
+    monkeypatch.setattr(DataFrameWriter, "saveAsTable", counting_save_as_table)
+    return calls
+
+
+def test_rewrites_overwrite_each_target_once(eng, writes):
+    """UPDATE, DELETE, REPLACE, ON DUPLICATE KEY UPDATE, multi-table
+    UPDATE and ALTER TABLE MODIFY COLUMN write each target table once,
+    with one INSERT OVERWRITE from the snapshotted post-image, and never
+    through a staging table."""
+    eng.execute("CREATE TABLE ow (k INT NOT NULL, v INT, PRIMARY KEY (k))")
+    eng.execute("CREATE TABLE ow2 (k INT NOT NULL, w INT, PRIMARY KEY (k))")
+    eng.execute("INSERT INTO ow VALUES (1, 10), (2, 20), (3, 30)")
+    eng.execute("INSERT INTO ow2 VALUES (1, 100), (2, 200)")
+    statements = [
+        ("UPDATE ow SET v = v + 1 WHERE k = 1", 1, ["ow"]),
+        ("DELETE FROM ow WHERE k = 3", 1, ["ow"]),
+        ("REPLACE INTO ow VALUES (2, 22), (4, 40)", 3, ["ow"]),
+        ("INSERT INTO ow VALUES (1, 0) ON DUPLICATE KEY UPDATE v = 12", 2, ["ow"]),
+        ("UPDATE ow a JOIN ow2 b ON a.k = b.k SET a.v = b.w, b.w = a.v", 4, ["ow", "ow2"]),
+        ("ALTER TABLE ow2 MODIFY COLUMN w BIGINT", 0, ["ow2"]),
+    ]
+    for sql, affected, targets in statements:
+        writes["overwrite"].clear()
+        assert eng.execute(sql).affected == affected, sql
+        assert sorted(writes["overwrite"]) == targets, sql
+    assert writes["saveAsTable"] == []
+    assert _table_rows(eng, "ow") == [(1, 100), (2, 200), (4, 40)]
+    assert _table_rows(eng, "ow2") == [(1, 12), (2, 22)]
+    # no match: nothing is written
+    writes["overwrite"].clear()
+    assert eng.execute("UPDATE ow SET v = 0 WHERE k = 99").affected == 0
+    assert eng.execute("DELETE FROM ow WHERE k = 99").affected == 0
+    assert writes["overwrite"] == []
+
+
+def test_dml_releases_every_snapshot(eng):
+    """Every snapshot a statement takes in the block manager is released
+    when it ends: on success, on the no-match return and on error."""
+    jsc = eng.spark.sparkContext._jsc
+    eng.execute("CREATE TABLE rel (k INT NOT NULL, v INT, PRIMARY KEY (k))")
+    eng.execute("CREATE TABLE rel2 (k INT NOT NULL, w INT, PRIMARY KEY (k))")
+    eng.execute("INSERT INTO rel2 VALUES (1, 100), (2, 200)")
+    persisted = jsc.getPersistentRDDs().size()
+    statements = [
+        "INSERT INTO rel VALUES (1, 10), (2, 20), (3, 30)",
+        "UPDATE rel SET v = v + 1 WHERE k = 1",
+        "UPDATE rel SET v = 0 WHERE k = 99",
+        "DELETE FROM rel WHERE k = 3",
+        "REPLACE INTO rel VALUES (2, 22)",
+        "INSERT INTO rel VALUES (1, 0) ON DUPLICATE KEY UPDATE v = 12",
+        "UPDATE rel a JOIN rel2 b ON a.k = b.k SET a.v = b.w, b.w = a.v",
+        "UPDATE rel a JOIN rel2 b ON a.k = b.k SET a.v = b.w",
+        "ALTER TABLE rel2 MODIFY COLUMN w BIGINT",
+    ]
+    for sql in statements:
+        eng.execute(sql)
+        assert jsc.getPersistentRDDs().size() == persisted, sql
+    for sql, code in [
+        ("UPDATE rel SET v = 'notanint' WHERE k = 1", 1366),
+        ("INSERT INTO rel VALUES (7, 'notanint')", 1366),
+        ("INSERT INTO rel VALUES (1, 1)", 1062),
+        ("UPDATE rel a JOIN rel2 b ON a.k = b.k SET a.v = 0, b.k = 7", 1062),
+    ]:
+        with pytest.raises(EbikeError) as ei:
+            eng.execute(sql)
+        assert ei.value.code == code, sql
+        assert jsc.getPersistentRDDs().size() == persisted, sql
+
+
 def test_strict_cast_edge_cases(eng):
     """Review-pass pins: (a) UPDATE raises 1366 on a matched row even
     when the OLD value is NULL (an unguarded pre-count would call
@@ -2352,6 +2458,14 @@ def test_strict_cast_edge_cases(eng):
     with pytest.raises(EbikeError) as ei:
         eng.execute("UPDATE sce SET n = 'notanint' WHERE id = 1")
     assert ei.value.code == 1366
+    # a 1366 on one row writes no row: id 3 would have become 99
+    eng.execute("INSERT INTO sce VALUES (3, 30)")
+    before = _table_rows(eng, "sce")
+    with pytest.raises(EbikeError) as ei:
+        eng.execute("UPDATE sce SET n = IF(id = 1, 'notanint', '99')")
+    assert ei.value.code == 1366
+    assert _table_rows(eng, "sce") == before
+    eng.execute("DELETE FROM sce WHERE id = 3")
     # unmatched rows never evaluate the assignment
     assert eng.execute("UPDATE sce SET n = 'nope' WHERE id = 99").affected == 0
     # BIGINT saturation: 1e30 would silently store Long.Max otherwise
