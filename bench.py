@@ -9,15 +9,17 @@ final line must stay small (asserted ≤1900 bytes below).
 Each query is executed as a full action (count of the result) under the
 registry's plan-cached surface (all_queries — r10). Per query: one
 ALWAYS-UNTIMED warm invocation (plan compilation, codegen, JIT, and —
-critically — first-touch materialization of any shared _persist_scoped
-frame the query leans on), then EBIKE_BENCH_RUNS timed invocations
-(default 2), reporting the min. The warm pass is unconditional so the
-per-query numbers measure the query, not its position in the window:
+critically — first-touch materialization of any shared persisted
+frame the query leans on, see ebike_spark/artifacts.py), then
+EBIKE_BENCH_RUNS timed invocations (default 2), reporting the min. The
+warm pass is unconditional so the per-query numbers measure the query,
+not its position in the window:
 r10's artifact showed 3 rows regress >2x with zero code change purely
 because a WINDOW_PREFIX reorder moved a shared frame's first-touch cost
-onto them (VERDICT-r10 task 1). io_*/stream_* stay uncached (side
-effects must re-run) but still get the untimed warm pass. Set
-EBIKE_BENCH_COLD=1 to skip the warm pass and time truly cold.
+onto them (VERDICT-r10 task 1). Queries declared eager (io_*, stream_*
+and driver-side loops) stay uncached (side effects must re-run) but
+still get the untimed warm pass. Set EBIKE_BENCH_COLD=1 to skip the
+warm pass and time truly cold.
 """
 
 from __future__ import annotations

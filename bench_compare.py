@@ -21,14 +21,14 @@ if _REPO not in sys.path:
 
 import duckdb  # noqa: E402
 
-from ebike_spark.plans.registry import REGISTRY, _load_all  # noqa: E402
+from ebike_spark.plans.registry import REGISTRY, all_queries  # noqa: E402
 from ebike_spark.session import get_spark  # noqa: E402
 from ebike_spark.sources.registry import TABLES  # noqa: E402
 
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    _load_all()
+    queries = all_queries()
     spark = get_spark("bench_compare")
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1_000_000).selectExpr("sum(id)").collect()
@@ -47,7 +47,8 @@ def main() -> None:
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
-    # streaming/io queries time their harness, not the plan — exclude.
+    # eager queries (io_* writes, stream_* harnesses, driver-side
+    # loops) time their harness, not a plan — exclude.
     # VERDICT-shaped queries (tag "verdict") are excluded from the
     # RATIO and listed separately: their Spark side runs the full
     # pipeline PLUS an exact audit twin while their oracle is only the
@@ -61,12 +62,11 @@ def main() -> None:
     # its timed cost is near-quadratic BY DESIGN); the production
     # twin (dedup_embedding_cosine_prod) carries the benched claim.
     oracle_regime = {"dedup_embedding_cosine"}
-    skip = {n for n in REGISTRY if n.startswith(("stream_", "io_"))}
     rows = []
     verdict_rows = []
     oracle_regime_rows = []
     for name, spec in sorted(REGISTRY.items()):
-        if spec.oracle is None or name in skip:
+        if spec.oracle is None or spec.eager:
             continue
         t0 = time.perf_counter()
         con.execute(spec.oracle).fetchall()
@@ -75,13 +75,11 @@ def main() -> None:
         con.execute(spec.oracle).fetchall()
         t_duck = min(t_duck_cold, time.perf_counter() - t0)
 
-        # same plan-cached surface the driver/bench run (registry
-        # _plan_cached): the warm pass builds + caches the plan, the
-        # timed pass measures resident-engine execution — mirroring
-        # DuckDB's warm second run above
-        from ebike_spark.plans.registry import _plan_cached
-
-        fn = _plan_cached(name, spec.fn)
+        # same plan-cached surface the driver/bench run (all_queries):
+        # the warm pass builds + caches the plan, the timed pass
+        # measures resident-engine execution — mirroring DuckDB's warm
+        # second run above
+        fn = queries[name]
         fn(spark, sf_dir).count()  # warm
         # Count Spark JOBS submitted by the timed pass (VERDICT-r12
         # task 3): under AQE every materialized query stage (shuffle or

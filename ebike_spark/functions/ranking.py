@@ -30,6 +30,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from ebike_spark.artifacts import persisted
+
 
 def _idiv(a, b):
     """Integer floor division of two non-negative integer Columns (the
@@ -54,8 +56,6 @@ def ntile_over_global_order(
     ``cache_tag``/``cache_key`` name the persist pin (see module
     docstring for why the pin is mandatory, not optional).
     """
-    from ebike_spark.operators.dedup import _persist_scoped
-
     # Partition count follows the session's shuffle parallelism (not a
     # literal) so the shape scales with the cluster: offsets stays one
     # row per task at any size. Some distributions set this conf to a
@@ -68,7 +68,7 @@ def ntile_over_global_order(
         "__pid", F.spark_partition_id()
     )
     local_w = Window.partitionBy("__pid").orderBy(*order_cols)
-    local = _persist_scoped(
+    local = persisted(
         spark,
         cache_tag,
         lambda: ranged.withColumn("__lrn", F.row_number().over(local_w)),

@@ -26,6 +26,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from ebike_spark.artifacts import memo
 from ebike_spark.plans.registry import register
 from ebike_spark.sources.registry import load_table
 
@@ -33,23 +34,22 @@ N_SEEDS = 8  # centroids = embeddings of vec_id 0..7 (deterministic)
 OUTLIER_TOP_N = 20
 
 
-_seed_cache: dict[str, list[tuple[int, list[float]]]] = {}
-
-
 def _seed_centroids(spark: SparkSession, sf: str) -> list[tuple[int, list[float]]]:
     """The K seed vectors — a bounded O(K·dim) driver fetch (K=8 rows),
-    analogous to similarity._query_vec; NOT a corpus collect. Cached per
-    sf_dir (they are a pure function of the stored table), so repeated
+    analogous to similarity._query_vec; NOT a corpus collect. Memoized
+    per fixture (they are a pure function of the stored table), so repeated
     pipeline invocations skip the fetch job's scheduler round-trip."""
-    if sf not in _seed_cache:
+
+    def fetch() -> list[tuple[int, list[float]]]:
         rows = (
             load_table(spark, sf, "embeddings")
             .where(F.col("vec_id") < N_SEEDS)
             .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
             .collect()
         )
-        _seed_cache[sf] = [(int(r["vec_id"]), list(r["v"])) for r in rows]
-    return _seed_cache[sf]
+        return [(int(r["vec_id"]), list(r["v"])) for r in rows]
+
+    return memo(spark, ("seed_centroids", sf), fetch)
 
 
 def _make_assigner(seeds: list[tuple[int, list[float]]], carry_v: bool = False):

@@ -9,6 +9,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from ebike_spark.artifacts import persisted
 from ebike_spark.functions.local_frames import local_df
 from ebike_spark.functions.textfns import md5_long, md5_long_sql, tokens
 from ebike_spark.operators.dedup import (
@@ -47,12 +48,10 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
     quasi-cliques, so typically 2-4 rounds). The iterative-algorithm
     pattern the reference cannot express at all; the oracle is a DuckDB
     recursive CTE over the same edges."""
-    from ebike_spark.operators.dedup import _persist_scoped
-
     spark = edges.sparkSession
     # session-scoped caches (previous call's copies are unpersisted);
     # the per-iteration label frames below are unpersisted inline
-    sym = _persist_scoped(
+    sym = persisted(
         spark,
         "cc_sym",
         edges.selectExpr("d1 AS u", "d2 AS v").unionAll(edges.selectExpr("d2 AS u", "d1 AS v")),
@@ -85,7 +84,7 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
         if changed == 0:
             break
     # register the surviving frame so the NEXT call releases it
-    labels = _persist_scoped(spark, "cc_labels", labels)
+    labels = persisted(spark, "cc_labels", labels)
     return labels.selectExpr("id AS doc_id", "label AS cluster_id")
 
 
@@ -120,11 +119,9 @@ def components(edges, max_iter: int = 50):
     there costs milliseconds where each distributed iteration costs a
     scheduler round-trip. Past the threshold, distributed min-label
     propagation (diameter-bounded iterations of shuffle joins)."""
-    from ebike_spark.operators.dedup import _persist_scoped
-
     # consumed by the size probe AND the chosen path; session-scoped so
     # repeated clustering calls don't accumulate cached RDDs
-    edges = _persist_scoped(edges.sparkSession, "cluster_edges", edges)
+    edges = persisted(edges.sparkSession, "cluster_edges", edges)
     n_edges = edges.limit(DRIVER_UNION_FIND_MAX_EDGES + 1).count()
     if n_edges <= DRIVER_UNION_FIND_MAX_EDGES:
         pairs = [(r["d1"], r["d2"]) for r in edges.collect()]
@@ -150,6 +147,7 @@ def components(edges, max_iter: int = 50):
     "dedup_cluster",
     oracle=_CLUSTER_ORACLE,
     tags=("dedup", "clustering", "iterative"),
+    eager=True,
 )
 def dedup_cluster(spark: SparkSession, sf: str) -> DataFrame:
     """Near-duplicate clusters: minhash-LSH candidate pairs → exact
@@ -255,8 +253,6 @@ def connected_components_star(edges: DataFrame, max_iter: int = 50) -> DataFrame
     identical semantics (and DuckDB recursive-CTE oracle) to
     connected_components, reached by a structurally different
     algorithm, so each is an independent witness for the other."""
-    from ebike_spark.operators.dedup import _persist_scoped
-
     spark = edges.sparkSession
 
     def _sig(e: DataFrame):
@@ -278,7 +274,7 @@ def connected_components_star(edges: DataFrame, max_iter: int = 50) -> DataFrame
         ).first()
         return (r[0], r[1], r[2])
 
-    nodes = _persist_scoped(
+    nodes = persisted(
         spark,
         "ccstar_nodes",
         edges.selectExpr("d1 AS u")
@@ -331,7 +327,7 @@ def connected_components_star(edges: DataFrame, max_iter: int = 50) -> DataFrame
         )
     # fixpoint = star forests: every non-root points at its component
     # minimum; roots (never on the child side) label themselves
-    star = _persist_scoped(spark, "ccstar_edges", e)
+    star = persisted(spark, "ccstar_edges", e)
     return (
         nodes.join(star, "u", "left")
         .select(
@@ -345,6 +341,7 @@ def connected_components_star(edges: DataFrame, max_iter: int = 50) -> DataFrame
     "dedup_cluster_distributed",
     oracle=_CLUSTER_ORACLE,
     tags=("dedup", "clustering", "iterative", "distributed"),
+    eager=True,
 )
 def dedup_cluster_distributed(spark: SparkSession, sf: str) -> DataFrame:
     """Near-duplicate clusters with NO driver-side branch at any scale:
@@ -382,6 +379,7 @@ TFIDF_TOP_K = 3
     SELECT doc_id, term, tfidf FROM scored WHERE rn <= {TFIDF_TOP_K}
     """,
     tags=("text", "tfidf"),
+    eager=True,
 )
 def text_tfidf(spark: SparkSession, sf: str) -> DataFrame:
     """Top-{TFIDF_TOP_K} TF-IDF terms per document. Three aggregates
@@ -775,6 +773,7 @@ def corpus_token_budget_plan(spark: SparkSession, sf: str) -> DataFrame:
     FROM r WHERE rn = 1
     """,
     tags=("dedup", "clustering", "curation", "survivor-pick"),
+    eager=True,
 )
 def corpus_dedup_survivor(spark: SparkSession, sf: str) -> DataFrame:
     """Keep-BEST-per-cluster dedup manifest: every document lands in a

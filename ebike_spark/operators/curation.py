@@ -440,6 +440,7 @@ def embed_quantize_int8(spark: SparkSession, sf: str) -> DataFrame:
     GROUP BY doc_id
     """,
     tags=("curation", "quality", "perplexity"),
+    eager=True,
 )
 def text_perplexity(spark: SparkSession, sf: str) -> DataFrame:
     """Unigram language-model scoring: mean negative log-likelihood per
@@ -493,6 +494,7 @@ def _mix_target_sql() -> str:
     FROM per CROSS JOIN tot
     """,
     tags=("curation", "sampling", "mixing"),
+    eager=True,
 )
 def corpus_mix_weights(spark: SparkSession, sf: str) -> DataFrame:
     """Training-mix reweighting: per-language token counts, actual

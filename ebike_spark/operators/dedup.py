@@ -28,11 +28,11 @@ against the exact ground truth they are meant to recover.
 from __future__ import annotations
 
 import random
-import weakref
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from ebike_spark.artifacts import memo, persisted, result_confs
 from ebike_spark.functions.local_frames import local_df
 from ebike_spark.functions.textfns import MD5_HEX_DIGITS, md5_long, md5_long_sql, tokens
 from ebike_spark.plans.registry import register
@@ -54,72 +54,6 @@ MINHASH_B = [_rnd.randrange(0, MINHASH_P) for _ in range(NUM_HASHES)]
 SIMHASH_BITS = 4 * MD5_HEX_DIGITS  # 56
 SIMHASH_BAND_BITS = 7  # 8 bands × 7 bits: pigeonhole-exact for hamming ≤ 7
 SIMHASH_MAX_HAMMING = 7
-
-
-# session → {tag → persisted DataFrame}. Repeated pipeline invocations
-# in a long-lived session would otherwise accumulate cached RDDs
-# (persist() without unpersist()); scoping one cached plan per
-# (session, pipeline) bounds that to the most recent call.
-_persist_pool: "weakref.WeakKeyDictionary[SparkSession, dict[str, DataFrame]]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
-def _persist_scoped(spark: SparkSession, tag: str, df, key: str | None = None) -> DataFrame:
-    """Cache a DataFrame under (session, tag), releasing the tag's
-    previous cache — unless the previous cache computes the SAME
-    result, in which case it is served warm: the test tables are
-    immutable within a session, so a re-invoked pipeline hitting the
-    materialized sketches is the resident-engine steady state, not
-    staleness. A different sf_dir (or plan change) rebuilds.
-
-    Sameness is established one of two ways:
-    - ``key`` given (e.g. the sf_dir): a cached entry under the same
-      (tag, key) is served WITHOUT building the candidate plan at all —
-      pass ``df`` as a zero-arg callable and it is only invoked on a
-      miss. This matters for the wide sketch plans: constructing and
-      canonicalizing the 56-aggregate simhash plan costs ~1 s of
-      driver time per call, dwarfing the cached execution. Same trust
-      model as sources.registry's plan cache (keyed by path, files
-      immutable within a session).
-    - no ``key``: the plans are compared via canonicalized sameResult.
-
-    Result-relevant session confs (timezone, ANSI mode) are folded
-    into the key alongside the caller's (review r11): a cached frame
-    captures resolution-time conf state, so a mid-session conf flip
-    must MISS here just like it misses the battery plan cache —
-    otherwise the registry-level conf keying is silently bypassed by
-    every query that leans on a persisted intermediate. The
-    sameResult path needs no folding: analysis embeds conf-dependent
-    state (e.g. timeZoneId) in the plan it compares.
-    """
-    from ebike_spark.plans.registry import _session_conf_key
-
-    if key is not None:
-        key = (key, _session_conf_key(spark))
-    pool = _persist_pool.setdefault(spark, {})
-    entry = pool.get(tag)  # (key, DataFrame)
-    if entry is not None:
-        old_key, old = entry
-        if key is not None:
-            if old_key == key:
-                return old
-        else:
-            built = df() if callable(df) else df
-            try:
-                if old._jdf.queryExecution().analyzed().sameResult(
-                    built._jdf.queryExecution().analyzed()
-                ):
-                    return old
-            except Exception:
-                pass
-            old.unpersist()
-            pool[tag] = (None, built.persist())
-            return pool[tag][1]
-        old.unpersist()
-    built = df() if callable(df) else df
-    pool[tag] = (key, built.persist())
-    return pool[tag][1]
 
 
 def _tune_wide_codegen(spark: SparkSession) -> None:
@@ -227,7 +161,7 @@ def _capped_parts(sh: DataFrame, df_cap: int) -> tuple[DataFrame, DataFrame, Dat
     shingle set split by document frequency at ``df_cap``, plus per-doc
     sorted stop arrays and shingle-set sizes.
 
-    rare and doc_stop are persisted through the session pool: the
+    rare and doc_stop are persisted through the session store: the
     exactness guard is an eager action whose subplan the main job
     repeats, the rare self-join references rare through TWO aliases
     (Spark does not reuse the exchange across aliases), and the three
@@ -236,13 +170,13 @@ def _capped_parts(sh: DataFrame, df_cap: int) -> tuple[DataFrame, DataFrame, Dat
     ~6 consumers. sameResult keying: a different sh or cap rebuilds."""
     spark = sh.sparkSession
     dfc = sh.groupBy("s").agg(F.count("*").alias("df"))
-    rare = _persist_scoped(
+    rare = persisted(
         spark,
         "capped_rare",
         sh.join(dfc.where(F.col("df") <= df_cap).select("s"), "s", "left_semi"),
     )
     stop = dfc.where(F.col("df") > df_cap).select("s")
-    doc_stop = _persist_scoped(
+    doc_stop = persisted(
         spark,
         "capped_doc_stop",
         sh.join(stop, "s", "left_semi")
@@ -420,6 +354,7 @@ def dedup_exact(spark: SparkSession, sf: str) -> DataFrame:
     "dedup_ngram_jaccard",
     oracle=_JACCARD_PAIRS_SQL,
     tags=("dedup", "jaccard", "ngram"),
+    eager=True,
 )
 def dedup_ngram(spark: SparkSession, sf: str) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs (threshold 0.8), with the
@@ -428,7 +363,7 @@ def dedup_ngram(spark: SparkSession, sf: str) -> DataFrame:
     the full sets — see jaccard_pairs). The pure uncapped form remains
     available as jaccard_pairs(sh, t) and is what the property tests
     compare against."""
-    sh = _persist_scoped(spark, "ngram_shingles", lambda: shingle_set(spark, sf), key=sf)
+    sh = persisted(spark, "ngram_shingles", lambda: shingle_set(spark, sf), key=sf)
     return jaccard_pairs(sh, JACCARD_THRESHOLD, df_cap=JACCARD_DF_CAP)
 
 
@@ -632,10 +567,10 @@ def dedup_ppjoin(spark: SparkSession, sf: str) -> DataFrame:
     token-sharing pairs -> 26 candidates at sf0.01 (442x), 1.13M ->
     104k at sf0.1 (10.8x) — worst-case corpus for prefix filtering
     and it still prunes an order of magnitude."""
-    sh = _persist_scoped(
+    sh = persisted(
         spark, "ngram_shingles", lambda: shingle_set(spark, sf), key=sf
     )
-    idx = _persist_scoped(
+    idx = persisted(
         spark, "ppjoin_index", lambda: _ppjoin_index(sh), key=sf
     )
     return ppjoin_pairs(index=idx)
@@ -805,6 +740,7 @@ WHERE d.doc_id >= cut.cv AND d.doc_id NOT IN (SELECT doc_id FROM dup)
     "dedup_incremental",
     oracle=_INCREMENTAL_SQL,
     tags=("dedup", "incremental", "ngram"),
+    eager=True,
 )
 def dedup_incremental(spark: SparkSession, sf: str) -> DataFrame:
     """Incremental near-dup dedup: the incoming batch (top 20% of the
@@ -822,7 +758,7 @@ def dedup_incremental(spark: SparkSession, sf: str) -> DataFrame:
     cutoff is one scalar aggregate collected to the driver — bounded,
     not a data collect."""
     docs = load_table(spark, sf, "documents")
-    sh = _persist_scoped(spark, "ngram_shingles", lambda: shingle_set(spark, sf), key=sf)
+    sh = persisted(spark, "ngram_shingles", lambda: shingle_set(spark, sf), key=sf)
     import math
 
     mx = docs.agg(F.max("doc_id").alias("m")).collect()[0]["m"]
@@ -852,61 +788,59 @@ WHERE c * 1.0 / (sa.n + sb.n - c) >= {JACCARD_THRESHOLD}
   AND d1 < cut.cv AND d2 >= cut.cv
 """
 
-# (session → {(layer, sf, conf) → (index_dir, cutoff)}): the persisted
-# band/bucket indexes ('text' minhash, 'embed' sign-LSH), each built
-# ONCE per (session, corpus) — the index lifecycle is off the probe
-# path, like the IVF quantizer. Lifecycle in _persisted_band_index.
-_LSH_INDEX_POOL: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
 def _persisted_band_index(
-    spark: SparkSession, pool_key: tuple, dir_tag: str, build
+    spark: SparkSession, index_key: tuple, dir_tag: str, build
 ) -> tuple[str, int]:
     """ONE implementation of the persisted-index lifecycle shared by
     the text and embedding incremental-dedup rows (review r13 batch 2
     — the embed twin had re-implemented this block, and with it the
-    concurrency-safety subtleties): pool lookup under (pool_key,
-    session confs) with an isdir re-check, and on a MISS ONLY,
+    concurrency-safety subtleties). The band/bucket index over the base
+    corpus is built once per (session, corpus) and memoized in the
+    session store, with an isdir re-check: the index lifecycle is off
+    the probe path, like the IVF quantizer. On a MISS ONLY,
     ``build() -> (banded_df, cutoff)`` computes the corpus banding +
     cutoff scalar, the pid-scoped sweep clears this process's (and
     dead processes') prior dirs under the same hash — a concurrent
     LIVE process's index, even under the SAME key, is never deleted —
-    and the banded rows are written as a parquet table. A pool HIT
-    returns the cached (index_dir, cutoff) before doing ANY work, so
-    the probe path never pays a scan or a driver action for the
-    index."""
+    and the banded rows are written as a parquet table. A HIT returns
+    the stored (index_dir, cutoff) before doing ANY work, so the probe
+    path never pays a scan or a driver action for the index. The
+    directory hash covers the result confs, like the store key: an
+    index built under one conf must not sweep the directory another
+    conf's entry (and the plans cached with it) still reads."""
     import hashlib
     import os
     import tempfile
 
-    from ebike_spark.plans.registry import _session_conf_key
     from ebike_spark.sources.io_layout import _sweep_scratch
 
-    key = (*pool_key, _session_conf_key(spark))
-    pool = _LSH_INDEX_POOL.setdefault(spark, {})
-    hit = pool.get(key)
-    if hit is not None and os.path.isdir(hit[0]):
-        return hit
-    banded, cutoff = build()
-    sig = hashlib.sha1(repr(key).encode()).hexdigest()[:10]
-    prefix = f"ebike_{dir_tag}_{sig}_"
-    base = tempfile.gettempdir()
-    _sweep_scratch(base, prefix)
-    path = os.path.join(
-        base, f"{prefix}{os.getpid()}_{random.getrandbits(40):010x}"
+    def write_index() -> tuple[str, int]:
+        banded, cutoff = build()
+        sig = hashlib.sha1(
+            repr((*index_key, result_confs(spark))).encode()
+        ).hexdigest()[:10]
+        prefix = f"ebike_{dir_tag}_{sig}_"
+        base = tempfile.gettempdir()
+        _sweep_scratch(base, prefix)
+        path = os.path.join(
+            base, f"{prefix}{os.getpid()}_{random.getrandbits(40):010x}"
+        )
+        banded.write.parquet(path)
+        return path, cutoff
+
+    return memo(
+        spark,
+        ("band_index", *index_key),
+        write_index,
+        valid=lambda hit: os.path.isdir(hit[0]),
     )
-    banded.write.parquet(path)
-    pool[key] = (path, cutoff)
-    return pool[key]
 
 
 def _lsh_band_index(spark: SparkSession, sf: str) -> tuple[str, int]:
     """The PERSISTED minhash band index over the base corpus:
     (doc_id, band, key) rows written once per (session, corpus, conf)
     as a parquet TABLE and read back for every probe. Returns
-    (index_dir, batch cutoff id); lifecycle (pooling, pid-scoped
+    (index_dir, batch cutoff id); lifecycle (memo, pid-scoped
     sweep, hit fast-path) in _persisted_band_index."""
 
     def build():
@@ -915,7 +849,7 @@ def _lsh_band_index(spark: SparkSession, sf: str) -> tuple[str, int]:
         docs = load_table(spark, sf, "documents")
         mx = docs.agg(F.max("doc_id")).first()[0]
         cutoff = int(math.ceil((1.0 - INCREMENT_FRACTION) * (mx + 1)))
-        sh = _persist_scoped(
+        sh = persisted(
             spark, "ngram_shingles", lambda: shingle_set(spark, sf), key=sf
         )
         banded = (
@@ -936,6 +870,7 @@ def _lsh_band_index(spark: SparkSession, sf: str) -> tuple[str, int]:
     "dedup_lsh_incremental",
     oracle=_LSH_INCR_SQL,
     tags=("dedup", "incremental", "minhash", "lsh"),
+    eager=True,
 )
 def dedup_lsh_incremental(spark: SparkSession, sf: str) -> DataFrame:
     """Cross-snapshot incremental LSH dedup (VERDICT-r12 task 7): the
@@ -966,7 +901,7 @@ def dedup_lsh_incremental(spark: SparkSession, sf: str) -> DataFrame:
     regardless of document length."""
     path, cutoff = _lsh_band_index(spark, sf)
     _tune_wide_codegen(spark)
-    sh = _persist_scoped(spark, "ngram_shingles", lambda: shingle_set(spark, sf), key=sf)
+    sh = persisted(spark, "ngram_shingles", lambda: shingle_set(spark, sf), key=sf)
     index = spark.read.parquet(path)
     batch_banded = (
         sh.where(F.col("doc_id") >= cutoff)
@@ -992,6 +927,7 @@ def dedup_lsh_incremental(spark: SparkSession, sf: str) -> DataFrame:
     "dedup_containment",
     oracle=_CONTAINMENT_PAIRS_SQL,
     tags=("dedup", "containment", "ngram"),
+    eager=True,
 )
 def dedup_containment(spark: SparkSession, sf: str) -> DataFrame:
     """Asymmetric n-gram containment near-dup pairs (threshold 0.9):
@@ -999,7 +935,7 @@ def dedup_containment(spark: SparkSession, sf: str) -> DataFrame:
     Shares the persisted shingle set with dedup_ngram_jaccard (one
     build per (session, sf)); the pair join is bounded by the same
     stop-shingle df cap, with verification exact on candidates."""
-    sh = _persist_scoped(spark, "ngram_shingles", lambda: shingle_set(spark, sf), key=sf)
+    sh = persisted(spark, "ngram_shingles", lambda: shingle_set(spark, sf), key=sf)
     return containment_pairs(sh, CONTAINMENT_THRESHOLD, df_cap=JACCARD_DF_CAP)
 
 
@@ -1102,7 +1038,7 @@ def fused_lsh_candidates(sh: DataFrame) -> DataFrame:
     signature-sized, never text-sized."""
     hashed = sh.select("doc_id", (F.abs(F.xxhash64("s")) % (2**31)).alias("x"))
     grouped = hashed.groupBy("doc_id").agg(F.collect_list("x").alias("xs"))
-    banded = _persist_scoped(
+    banded = persisted(
         sh.sparkSession,
         "minhash_banded",
         grouped.mapInPandas(make_fused_minhash_bander(), "doc_id long, band int, key string"),
@@ -1132,7 +1068,7 @@ def minhash_verified_pairs(spark: SparkSession, sf: str) -> DataFrame:
     _tune_wide_codegen(spark)
 
     def build() -> DataFrame:
-        sh = _persist_scoped(spark, "ngram_shingles", lambda: shingle_set(spark, sf), key=sf)
+        sh = persisted(spark, "ngram_shingles", lambda: shingle_set(spark, sf), key=sf)
         cand = fused_lsh_candidates(sh)
         return verify_jaccard(sh, cand, JACCARD_THRESHOLD)
 
@@ -1142,7 +1078,7 @@ def minhash_verified_pairs(spark: SparkSession, sf: str) -> DataFrame:
     # bucket join + verify after dedup_minhash_lsh had already run —
     # the resident-engine steady state is "dup pairs are materialized
     # once per corpus, every downstream consumer reads them".
-    return _persist_scoped(spark, "minhash_pairs", build, key=sf)
+    return persisted(spark, "minhash_pairs", build, key=sf)
 
 
 @register(
@@ -1229,11 +1165,11 @@ def dedup_simhash(spark: SparkSession, sf: str) -> DataFrame:
     # the banded self-join: the 56-aggregate signature job is not
     # exchange-reused across the join's two aliases and would run twice
     # (measured 22% of the pipeline)
-    sig = _persist_scoped(
+    sig = persisted(
         spark,
         "simhash_sig",
         lambda: simhash_signatures(
-            _persist_scoped(spark, "ngram_shingles", lambda: shingle_set(spark, sf), key=sf)
+            persisted(spark, "ngram_shingles", lambda: shingle_set(spark, sf), key=sf)
         ),
         key=sf,
     )
@@ -1345,7 +1281,7 @@ def embedding_candidates(
     the operating regime — the fixture-recall defaults or the
     production r=16/L=8 pruning parameters; cache_tag must be distinct
     per regime so the persisted banded frames never cross."""
-    banded = _persist_scoped(
+    banded = persisted(
         e.sparkSession,
         cache_tag,
         e.mapInPandas(
@@ -1487,6 +1423,7 @@ def _embed_prod_augmented(spark: SparkSession, sf: str) -> DataFrame:
     # the oracle is the brute-force audit only — different computations,
     # so bench_compare keeps it out of the ratio bucket
     tags=("dedup", "embedding", "cosine", "production", "verdict"),
+    eager=True,
 )
 def dedup_embedding_prod(spark: SparkSession, sf: str) -> DataFrame:
     """Embedding cosine near-dup at the PRODUCTION threshold
@@ -1516,7 +1453,7 @@ def dedup_embedding_prod(spark: SparkSession, sf: str) -> DataFrame:
     from ebike_spark.plans.registry import sf_bound
 
     e = _embed_prod_augmented(spark, sf)
-    cand = _persist_scoped(
+    cand = persisted(
         spark,
         "embed_cand_prod",
         lambda: embedding_candidates(
@@ -1624,7 +1561,7 @@ def dedup_embedding_incremental(spark: SparkSession, sf: str) -> DataFrame:
     # + both chunk-pair sides), and unpersisted that re-ran the batch
     # banding + index join 3× per action (review r13 batch 2 — the
     # MapInPandas-count plan test caught it)
-    cand = _persist_scoped(spark, "embed_cand_incr", probe, key=sf)
+    cand = persisted(spark, "embed_cand_incr", probe, key=sf)
     return verify_candidates_blocked(e, cand, EMBED_PROD_THRESHOLD)
 
 

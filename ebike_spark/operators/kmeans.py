@@ -215,6 +215,7 @@ FROM cl1 LEFT JOIN stats USING (cid)
     "embed_kmeans_lloyd",
     oracle=_KMEANS_ORACLE,
     tags=("embeddings", "clustering", "iterative"),
+    eager=True,
 )
 def embed_kmeans_lloyd(spark: SparkSession, sf: str) -> DataFrame:
     """Two exact Lloyd iterations (assign under seeds → integer
@@ -253,6 +254,7 @@ def embed_kmeans_lloyd(spark: SparkSession, sf: str) -> DataFrame:
     FROM embeddings
     """,
     tags=("embeddings", "clustering", "iterative", "verdict"),
+    eager=True,
 )
 def embed_kmeans_converged(spark: SparkSession, sf: str) -> DataFrame:
     """Lloyd's iterated to a fixed point: stop when the integer

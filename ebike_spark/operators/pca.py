@@ -147,6 +147,7 @@ def pca_model(spark: SparkSession, emb: DataFrame):
     FROM embeddings
     """,
     tags=("embeddings", "pca", "verdict"),
+    eager=True,
 )
 def embed_pca_audit(spark: SparkSession, sf: str) -> DataFrame:
     """Distributed PCA fit + projection audit (see module docstring):

@@ -14,12 +14,11 @@ Spark-native extension operators:
 
 from __future__ import annotations
 
-import weakref
-
 import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from ebike_spark.artifacts import memo, persisted
 from ebike_spark.functions.local_frames import local_df
 from ebike_spark.functions.textfns import cosine_sim, dot
 from ebike_spark.plans.registry import register, sf_bound
@@ -63,6 +62,7 @@ def _query_vec(spark: SparkSession, sf: str) -> list[float]:
     LIMIT {TOP_K}
     """,
     tags=("similarity", "ann", "topk"),
+    eager=True,
 )
 def ann_topk(spark: SparkSession, sf: str) -> DataFrame:
     """Exact cosine top-k to a fixed query vector. The cosine is a pure
@@ -114,15 +114,6 @@ def lsh_bucket(vec_col, planes: np.ndarray):
 IVF_CLUSTERS = 16
 IVF_PROBES = 4
 IVF_TRAIN_FRACTION = 0.5
-# centroids per (session, sf_dir): the trained quantizer is index
-# state, not query state — one KMeans fit per corpus per session.
-# WeakKey so stopped sessions don't pin forever (same pattern as
-# dedup._persist_pool — review r10)
-_ivf_centers_pool: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
 def _sq_l2(a, b):
     """Squared L2 distance of two array<double> — sequential built-in
     HOF accumulation (codegen, same order both engines)."""
@@ -149,11 +140,7 @@ def _ivf_index(spark: SparkSession, sf: str):
       partition/cluster column would be.
 
     Returns (centers, assigned DF[vec_id, v, cell])."""
-    from ebike_spark.operators.dedup import _persist_scoped
-
-    pool = _ivf_centers_pool.setdefault(spark, {})
-    centers = pool.get(sf)
-    if centers is None:
+    def _train() -> list[list[float]]:
         from pyspark.ml.clustering import KMeans
         from pyspark.ml.functions import array_to_vector
 
@@ -188,8 +175,11 @@ def _ivf_index(spark: SparkSession, sf: str):
             featuresCol="features",
             predictionCol="cell",
         )
-        centers = [[float(x) for x in c] for c in km.fit(train).clusterCenters()]
-        pool[sf] = centers
+        return [[float(x) for x in c] for c in km.fit(train).clusterCenters()]
+
+    # the trained quantizer is index state, not query state: one KMeans
+    # fit per corpus per session
+    centers = memo(spark, ("ivf_centers", sf), _train)
 
     def _assigned():
         e = load_table(spark, sf, "embeddings").select(
@@ -203,7 +193,7 @@ def _ivf_index(spark: SparkSession, sf: str):
         cell = (F.array_position(darr, F.array_min(darr)) - 1).cast("int")
         return e.select("vec_id", "v", cell.alias("cell"))
 
-    assigned = _persist_scoped(spark, "ivf_assigned", _assigned, key=sf)
+    assigned = persisted(spark, "ivf_assigned", _assigned, key=sf)
     return centers, assigned
 
 
@@ -255,6 +245,7 @@ IVF_RECALL_FLOOR = 0.4
            TRUE AS recall_ge_sf_bound, TRUE AS probe_frac_le_half
     """,
     tags=("similarity", "ann", "ivf", "kmeans", "verdict"),
+    eager=True,
 )
 def ann_ivf(spark: SparkSession, sf: str) -> DataFrame:
     """IVF ANN verdict: probe-and-rerank against the OFFLINE-built
@@ -308,6 +299,7 @@ RANGE_TAU = 0.3
       AND list_cosine_similarity(CAST(embedding AS DOUBLE[]), qv) >= {RANGE_TAU}
     """,
     tags=("similarity", "ann", "range"),
+    eager=True,
 )
 def ann_range_search(spark: SparkSession, sf: str) -> DataFrame:
     """Range query: ALL vectors within cosine ≥ {RANGE_TAU} of the query
@@ -345,7 +337,6 @@ def _lsh_probe(spark: SparkSession, sf: str):
             acc += a * float(b)
         if acc > 0:
             q_bucket |= 1 << i
-    from ebike_spark.operators.dedup import _persist_scoped
 
     def _bucketed():
         # the stored-bucket-column shape: at scale this column is
@@ -362,7 +353,7 @@ def _lsh_probe(spark: SparkSession, sf: str):
             "vec_id", v.alias("v"), lsh_bucket(v, planes).alias("bucket")
         )
 
-    with_bucket = _persist_scoped(spark, "lsh_buckets", _bucketed, key=sf)
+    with_bucket = persisted(spark, "lsh_buckets", _bucketed, key=sf)
     near = F.bit_count(F.col("bucket").bitwiseXOR(F.lit(q_bucket))) <= LSH_PROBE_HAMMING
     qv = F.lit(qv_list).cast("array<double>")
     cos = cosine_sim(F.col("v"), qv)
@@ -423,6 +414,7 @@ def _lsh_bucket_sql() -> str:
     LIMIT {TOP_K}
     """.replace("{bucket}", _lsh_bucket_sql()),
     tags=("similarity", "ann", "lsh"),
+    eager=True,
 )
 def ann_lsh(spark: SparkSession, sf: str) -> DataFrame:
     """ANN via random-hyperplane LSH: score only vectors whose bucket
@@ -563,6 +555,7 @@ def embed_pq_encode(spark: SparkSession, sf: str) -> DataFrame:
     FROM adc ORDER BY adc_d, vec_id LIMIT {TOP_K}
     """,
     tags=("similarity", "ann", "pq", "adc"),
+    eager=True,
 )
 def ann_pq_adc_topk(spark: SparkSession, sf: str) -> DataFrame:
     """ANN top-{TOP_K} by PQ asymmetric distance: the query builds a
@@ -668,6 +661,7 @@ def _make_knn_pruner(queries: list[tuple[int, list[float]]], k_keep: int):
     SELECT query_id, vec_id, ROUND(c, 4) AS cos FROM r WHERE rn <= {TOP_K}
     """,
     tags=("similarity", "ann", "knn-join"),
+    eager=True,
 )
 def ann_knn_join(spark: SparkSession, sf: str) -> DataFrame:
     """Exact batch kNN join: top-{TOP_K} cosine neighbors for each of
@@ -743,6 +737,7 @@ def _rp_oracle() -> str:
     "embed_random_projection",
     oracle=_rp_oracle(),
     tags=("embedding", "random-projection", "jl"),
+    eager=True,
 )
 def embed_random_projection(spark: SparkSession, sf: str) -> DataFrame:
     """Johnson-Lindenstrauss sign random projection to {RP_DIMS} dims
@@ -790,6 +785,7 @@ ANN_FILTER_LABEL = 3
     LIMIT {TOP_K}
     """,
     tags=("similarity", "ann", "filtered", "topk"),
+    eager=True,
 )
 def ann_filtered_topk(spark: SparkSession, sf: str) -> DataFrame:
     """FILTERED vector search: top-k cosine restricted to a metadata

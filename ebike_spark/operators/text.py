@@ -172,6 +172,7 @@ VOCAB_TOP_K = 20
     FROM enc GROUP BY doc_id
     """,
     tags=("text", "vocabulary", "encode"),
+    eager=True,
 )
 def text_vocab_encode(spark: SparkSession, sf: str) -> DataFrame:
     """Tokenize-to-ids: build a frequency-ranked vocabulary (top
@@ -512,6 +513,7 @@ NOVELTY_BATCH_FRACTION = 0.2  # top 20% of the doc_id space = the batch
     GROUP BY 1
     """,
     tags=("text", "ngram", "curation", "novelty", "incremental"),
+    eager=True,
 )
 def text_novelty_incremental(spark: SparkSession, sf: str) -> DataFrame:
     """Batch-incremental novelty — the production shape of

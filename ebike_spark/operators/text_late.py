@@ -17,11 +17,10 @@ for this corpus' character set.
 
 from __future__ import annotations
 
-import weakref
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from ebike_spark.artifacts import memo, persisted
 from ebike_spark.functions.local_frames import local_df
 from ebike_spark.functions.textfns import tokens
 from ebike_spark.plans.registry import register
@@ -693,6 +692,7 @@ def _bpe_oracle(k_merges: int = BPE_MERGES) -> str:
     "text_bpe_learn_merges",
     oracle=_bpe_oracle(),
     tags=("text", "bpe", "iterative", "beyond-reference", "verdictless-exact"),
+    eager=True,
 )
 def text_bpe_learn_merges(spark: SparkSession, sf: str) -> DataFrame:
     """Learn the first {BPE_MERGES} BPE merges from the documents
@@ -727,14 +727,13 @@ def _bpe_learn(spark: SparkSession, sf: str):
     workload text_bpe_learn_merges exists to measure, so THAT row
     never reads a memo (review r11's rejection, unchanged). The
     ENCODER row is different: since r14, text_bpe_encode reads the
-    (session, sf, conf)-scoped memo _bpe_learned_scoped — applying an
+    trainer's result from the session store (artifacts.memo) — applying an
     already-trained tokenizer is the encoder's declared contract, and
     its timed work (wl aggregate + vocab join + rollup) re-executes
     per invocation. The corpus scan is amortized for both via the
     session-scoped vocab cache; re-running the loop costs BPE_MERGES
     vocabulary-sized jobs per invocation."""
     docs = load_table(spark, sf, "documents")
-    from ebike_spark.operators.dedup import _persist_scoped
 
     def _vocab():
         return (
@@ -749,7 +748,7 @@ def _bpe_learn(spark: SparkSession, sf: str):
             .coalesce(1)
         )
 
-    vocab = _persist_scoped(spark, "bpe_vocab", _vocab, key=sf)
+    vocab = persisted(spark, "bpe_vocab", _vocab, key=sf)
     seq = F.col("seq")
     merges: list[tuple[int, str, str, int]] = []
     for k in range(1, BPE_MERGES + 1):
@@ -779,36 +778,6 @@ def _bpe_learn(spark: SparkSession, sf: str):
             )
         )
     return merges, vocab, seq
-
-
-# (session → {(sf, conf_key) → (merges, vocab frame, seq Column)}) —
-# the trained-tokenizer memo behind text_bpe_encode (r14, VERDICT-r13
-# task 6). The ENCODER's declared contract is applying an
-# already-learned merge table — production tokenizer accounting never
-# retrains per query — so the trainer loop runs ONCE per (session,
-# fixture) in the bench's untimed warm pass and the timed probe is the
-# encode plan alone (wl aggregate + vocab join), exactly the
-# index-off-the-timed-path lifecycle of ann_ivf and the incremental
-# dedup operators. text_bpe_learn_merges deliberately does NOT read
-# this memo: the trainer loop IS that row's measured workload (the r11
-# rejection of memoizing it stands unchanged). Keyed on the same
-# result-relevant session confs as the plan cache so a mid-session
-# ANSI/timezone flip relearns instead of serving stale merges.
-_BPE_LEARNED: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
-def _bpe_learned_scoped(spark: SparkSession, sf: str):
-    from ebike_spark.plans.registry import _session_conf_key
-
-    key = (sf, _session_conf_key(spark))
-    pool = _BPE_LEARNED.setdefault(spark, {})
-    hit = pool.get(key)
-    if hit is None:
-        hit = _bpe_learn(spark, sf)
-        pool[key] = hit
-    return hit
 
 
 def _bpe_encode_oracle(k_merges: int = BPE_MERGES) -> str:
@@ -855,13 +824,13 @@ def text_bpe_encode(spark: SparkSession, sf: str) -> DataFrame:
     (one corpus scan, one shuffle). That is how production tokenizer
     accounting works at 100 TB: the corpus contributes only word
     counts; all merge logic runs at vocabulary cardinality — and the
-    merge table itself is LEARNED ONCE per (session, fixture)
-    (_bpe_learned_scoped): the encoder applies a trained tokenizer,
+    merge table itself is LEARNED ONCE per (session, fixture), in
+    the bench's untimed warm pass: the encoder applies a trained tokenizer,
     it does not retrain it per invocation (r14 — the timed row
     previously re-ran the whole trainer loop, ~6 scheduling rounds of
     non-encode work per rep; the trainer remains fully timed in
     text_bpe_learn_merges)."""
-    _, vocab, seq = _bpe_learned_scoped(spark, sf)
+    _, vocab, seq = memo(spark, ("bpe_learned", sf), lambda: _bpe_learn(spark, sf))
     encoded = vocab.select(
         "word", F.size(F.split(seq, " ")).cast("long").alias("n_tok")
     )

@@ -16,6 +16,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from ebike_spark.artifacts import persisted
 from ebike_spark.plans.registry import register
 from ebike_spark.sources.registry import load_table
 
@@ -726,10 +727,8 @@ def ev_trend_theil_sen(spark: SparkSession, sf: str) -> DataFrame:
     persist); the quadratic pair join runs on the bounded DAY axis
     (span² pairs per type, ~constant), never on events. Same
     bounded-axis discipline as the survival life table."""
-    from ebike_spark.operators.dedup import _persist_scoped
-
     ev = load_table(spark, sf, "events")
-    daily = _persist_scoped(
+    daily = persisted(
         spark,
         "theil_sen_daily",
         lambda: ev.groupBy(

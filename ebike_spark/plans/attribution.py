@@ -16,6 +16,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from ebike_spark.artifacts import persisted
 from ebike_spark.plans.registry import register
 from ebike_spark.sources.registry import load_table
 
@@ -213,8 +214,6 @@ def ev_rfm_segments(spark: SparkSession, sf: str) -> DataFrame:
     3×3-scalar quantile aggregate (distributed sort-based, grid-sized
     result broadcast back); one scan-speed CASE pass; one ≤64-row
     groupBy. No data-sized window, no driver loop."""
-    from ebike_spark.operators.dedup import _persist_scoped
-
     ev = load_table(spark, sf, "events")
 
     def build_rfm():
@@ -239,7 +238,7 @@ def ev_rfm_segments(spark: SparkSession, sf: str) -> DataFrame:
 
     # the per-user aggregate feeds TWO passes (quantile cutoffs, then
     # scoring) — persist it so raw events scan once, not twice
-    rfm = _persist_scoped(spark, "rfm_user", build_rfm, key=sf)
+    rfm = persisted(spark, "rfm_user", build_rfm, key=sf)
     q = rfm.agg(
         F.percentile("recency_days", F.lit([0.25, 0.5, 0.75])).alias("rq"),
         F.percentile("freq", F.lit([0.25, 0.5, 0.75])).alias("fq"),

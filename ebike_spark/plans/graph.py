@@ -14,6 +14,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from ebike_spark.artifacts import memo, persisted
 from ebike_spark.plans.registry import register
 from ebike_spark.sources.registry import load_table
 
@@ -30,8 +31,6 @@ def _transition_graph(spark: SparkSession, sf: str):
     a ≤types node set. The user-keyed window pass is the only
     corpus-sized work; every iteration downstream touches only the
     cached frames."""
-    from ebike_spark.operators.dedup import _persist_scoped
-
     ev = load_table(spark, sf, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
 
@@ -53,8 +52,8 @@ def _transition_graph(spark: SparkSession, sf: str):
         # parallelism; only the bounded result narrows.
         return e.join(F.broadcast(outs), "u").coalesce(1)
 
-    edges = _persist_scoped(spark, "pagerank_edges", _edges, key=sf)
-    nodes = _persist_scoped(
+    edges = persisted(spark, "pagerank_edges", _edges, key=sf)
+    nodes = persisted(
         spark,
         "pagerank_nodes",
         lambda: ev.select(F.col("event_type").alias("state"))
@@ -138,15 +137,20 @@ def ev_pagerank_states(spark: SparkSession, sf: str) -> DataFrame:
     production pre-normalizes c/out(u) into per-edge integer
     probabilities once, keeping the loop arithmetic bounded."""
     edges, nodes = _transition_graph(spark, sf)
-    n = nodes.count()  # bounded by event-type cardinality
-    # ADVICE-r10 guard: 85*r*c uses non-ANSI Spark arithmetic, which
-    # WRAPS silently on BIGINT overflow while the DuckDB oracle's //
-    # raises. Per-node rank never exceeds the total mass PR_UNITS
-    # (floors only lose mass), so the worst product is bounded by
-    # 85 * PR_UNITS * max(c) — assert it fits from the cached edge
-    # stats (a ≤types²-row agg) and fail loudly instead of returning
-    # wrong ranks at extreme edge weights.
-    max_c = edges.agg(F.max("c")).first()[0] or 0
+    # n is bounded by event-type cardinality. ADVICE-r10 guard: 85*r*c
+    # uses non-ANSI Spark arithmetic, which WRAPS silently on BIGINT
+    # overflow while the DuckDB oracle's // raises. Per-node rank never
+    # exceeds the total mass PR_UNITS (floors only lose mass), so the
+    # worst product is bounded by 85 * PR_UNITS * max(c) — assert it
+    # fits from the cached edge stats (a ≤types²-row agg) and fail
+    # loudly instead of returning wrong ranks at extreme edge weights.
+    # Both scalars derive from the session's persisted graph, so they
+    # are memoized with it: a rebuild of this plan runs no Spark job.
+    n, max_c = memo(
+        spark,
+        ("pagerank_stats", sf),
+        lambda: (nodes.count(), edges.agg(F.max("c")).first()[0] or 0),
+    )
     if PR_DAMP_NUM * PR_UNITS * max_c >= (1 << 63):
         raise OverflowError(
             f"pagerank step would overflow BIGINT: 85*{PR_UNITS}*{max_c}"
@@ -273,6 +277,7 @@ def _sssp_relax_round(wedges: DataFrame, dist: DataFrame) -> DataFrame:
     "ev_sssp_bellman_ford",
     oracle=_sssp_oracle(),
     tags=("events", "graph", "sssp", "iterative", "beyond-reference"),
+    eager=True,
 )
 def ev_sssp_bellman_ford(spark: SparkSession, sf: str) -> DataFrame:
     """Single-source shortest path over the weighted event-transition
@@ -356,6 +361,7 @@ def ev_sssp_bellman_ford(spark: SparkSession, sf: str) -> DataFrame:
     "ev_sssp_broadcast",
     oracle=_sssp_oracle(),
     tags=("events", "graph", "sssp", "iterative", "beyond-reference"),
+    eager=True,
 )
 def ev_sssp_broadcast(spark: SparkSession, sf: str) -> DataFrame:
     """The PRODUCTION twin of ev_sssp_bellman_ford: identical

@@ -17,6 +17,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from ebike_spark.artifacts import persisted
 from ebike_spark.plans.registry import register
 from ebike_spark.sources.registry import load_table
 
@@ -131,12 +132,10 @@ def ev_hierarchical_rollup(spark: SparkSession, sf: str) -> DataFrame:
 def hierarchical_rollup(ev: DataFrame) -> DataFrame:
     """DataFrame-level core of ev_hierarchical_rollup (shared with the
     10× scale probe)."""
-    from ebike_spark.operators.dedup import _persist_scoped
-
     # pooled persist (not a bare .persist()): superseded entries are
     # unpersisted, so repeated invocations in a resident session don't
     # accumulate cached copies; identical inputs are served warm
-    minute = _persist_scoped(
+    minute = persisted(
         ev.sparkSession,
         "rollup_minute_partials",
         ev.groupBy(F.date_trunc("minute", F.col("ts")).alias("b"), "event_type").agg(
@@ -865,10 +864,8 @@ def ev_active_users(spark: SparkSession, sf: str) -> DataFrame:
     The same partial-reduction idea as the hierarchical rollup, applied
     to the non-decomposable COUNT DISTINCT: distinct-by-day IS the
     reaggregatable partial for any coarser calendar window."""
-    from ebike_spark.operators.dedup import _persist_scoped
-
     ev = load_table(spark, sf, "events")
-    ud = _persist_scoped(
+    ud = persisted(
         spark,
         "active_users_user_day",
         lambda: ev.select(
@@ -983,9 +980,7 @@ def ev_active_users_hll(spark: SparkSession, sf: str) -> DataFrame:
     # tag), so the audit adds no extra raw-events scan: day exact is
     # its row count per day, month exact its per-month user distinct
     # (a monthly-active user necessarily has a day row)
-    from ebike_spark.operators.dedup import _persist_scoped
-
-    ud = _persist_scoped(
+    ud = persisted(
         spark,
         "active_users_user_day",
         lambda: ev.select(
@@ -1344,13 +1339,11 @@ def ev_stickiness_weekly(spark: SparkSession, sf: str) -> DataFrame:
     feeds BOTH the day-count rollup and the weekly count-distinct —
     the same compact-partial discipline as ev_active_users; outputs
     are calendar-sized."""
-    from ebike_spark.operators.dedup import _persist_scoped
-
     ev = load_table(spark, sf, "events")
     # SAME tag as ev_active_users/_hll: the frame is identical, so a
     # session running the family shares one scan + one cache (review
     # finding: a private tag duplicated both)
-    ud = _persist_scoped(
+    ud = persisted(
         spark,
         "active_users_user_day",
         lambda: ev.select(
@@ -1401,10 +1394,8 @@ def ev_forecast_snaive_backtest(spark: SparkSession, sf: str) -> DataFrame:
     frame; the lag join is a self-equi-join on (type, day−7) over that
     calendar-bounded frame (tiny at any event volume — Spark may
     broadcast it); final rollup is one row per type."""
-    from ebike_spark.operators.dedup import _persist_scoped
-
     ev = load_table(spark, sf, "events")
-    daily = _persist_scoped(
+    daily = persisted(
         spark,
         "snaive_daily_counts",
         lambda: ev.groupBy(

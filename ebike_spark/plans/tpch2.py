@@ -18,6 +18,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from ebike_spark.artifacts import persisted
 from ebike_spark.plans.registry import register
 from ebike_spark.sources.registry import load_table
 
@@ -451,7 +452,6 @@ def q32_recursive_reach(spark: SparkSession, sf: str) -> DataFrame:
     never touches raw events again). Depth is hard-bounded; at
     web-graph scale the same plan becomes frontier joins against a
     bucketed edge table."""
-    from ebike_spark.operators.dedup import _persist_scoped
     from ebike_spark.sources.registry import register_views
 
     register_views(spark, sf)
@@ -468,7 +468,7 @@ def q32_recursive_reach(spark: SparkSession, sf: str) -> DataFrame:
             """
         )
 
-    _persist_scoped(spark, "q32_edges", _edges, key=sf).createOrReplaceTempView(
+    persisted(spark, "q32_edges", _edges, key=sf).createOrReplaceTempView(
         "q32_edges"
     )
     return spark.sql(

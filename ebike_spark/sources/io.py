@@ -27,6 +27,7 @@ import uuid
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from ebike_spark.artifacts import persisted
 from ebike_spark.functions.textfns import md5_long, md5_long_sql
 from ebike_spark.plans.registry import register
 from ebike_spark.sources.registry import load_table
@@ -66,7 +67,7 @@ def _agg(df: DataFrame) -> DataFrame:
     )
 
 
-@register("io_csv_roundtrip", oracle=_AGG_ORACLE, tags=("io", "csv"))
+@register("io_csv_roundtrip", oracle=_AGG_ORACLE, tags=("io", "csv"), eager=True)
 def io_csv(spark: SparkSession, sf: str) -> DataFrame:
     """CSV write→read with explicit schema (never inferSchema at scale —
     it double-reads the data). Header on; timestamps as epoch micros."""
@@ -78,7 +79,7 @@ def io_csv(spark: SparkSession, sf: str) -> DataFrame:
     return _agg(back)
 
 
-@register("io_json_roundtrip", oracle=_AGG_ORACLE, tags=("io", "json"))
+@register("io_json_roundtrip", oracle=_AGG_ORACLE, tags=("io", "json"), eager=True)
 def io_json(spark: SparkSession, sf: str) -> DataFrame:
     """JSON-lines write→read with explicit schema (longs round-trip
     exactly via Jackson; no schema inference pass)."""
@@ -90,7 +91,7 @@ def io_json(spark: SparkSession, sf: str) -> DataFrame:
     return _agg(back)
 
 
-@register("io_orc_roundtrip", oracle=_AGG_ORACLE, tags=("io", "orc"))
+@register("io_orc_roundtrip", oracle=_AGG_ORACLE, tags=("io", "orc"), eager=True)
 def io_orc(spark: SparkSession, sf: str) -> DataFrame:
     """ORC write→read — the second columnar format; vectorized reader,
     predicate pushdown, same plan shape as parquet."""
@@ -100,7 +101,7 @@ def io_orc(spark: SparkSession, sf: str) -> DataFrame:
     return _agg(back)
 
 
-@register("io_zstd_roundtrip", oracle=_AGG_ORACLE, tags=("io", "parquet", "zstd"))
+@register("io_zstd_roundtrip", oracle=_AGG_ORACLE, tags=("io", "parquet", "zstd"), eager=True)
 def io_zstd(spark: SparkSession, sf: str) -> DataFrame:
     """Parquet with ZSTD column compression — the storage-cost lever at
     100 TB: zstd runs ~30-50% smaller than snappy at comparable read
@@ -138,7 +139,7 @@ FROM documents
 """
 
 
-@register("io_text_roundtrip", oracle=_TEXT_ORACLE, tags=("io", "text"))
+@register("io_text_roundtrip", oracle=_TEXT_ORACLE, tags=("io", "text"), eager=True)
 def io_text(spark: SparkSession, sf: str) -> DataFrame:
     """Plain-text write→read (one document per line — the raw-corpus
     interchange format). Line order is partition-dependent, so the check
@@ -170,6 +171,7 @@ def io_text(spark: SparkSession, sf: str) -> DataFrame:
     FROM sim GROUP BY event_type
     """,
     tags=("io", "parquet", "schema-evolution"),
+    eager=True,
 )
 def io_schema_evolution(spark: SparkSession, sf: str) -> DataFrame:
     """Parquet schema evolution: batch 1 is written with the ORIGINAL
@@ -216,6 +218,7 @@ def io_schema_evolution(spark: SparkSession, sf: str) -> DataFrame:
     FROM g
     """,
     tags=("io", "csv", "malformed", "robustness"),
+    eager=True,
 )
 def io_csv_malformed(spark: SparkSession, sf: str) -> DataFrame:
     """Malformed-input robustness: the CSV drop is polluted with one
@@ -257,12 +260,10 @@ def io_csv_malformed(spark: SparkSession, sf: str) -> DataFrame:
         "event_id long, ts_us long, user_id long, event_type string, "
         "value double, props string, _bad string"
     )
-    # _persist_scoped, never a bare .cache(): keyed by the fresh scratch
+    # persisted, never a bare .cache(): keyed by the fresh scratch
     # path so each invocation releases the previous run's cached copy
-    # (the session-lifetime leak rule from operators/dedup.py)
-    from ebike_spark.operators.dedup import _persist_scoped
-
-    back = _persist_scoped(
+    # (the session-lifetime leak rule of ebike_spark/artifacts.py)
+    back = persisted(
         spark,
         "io_csv_malformed_back",
         lambda: spark.read.option("mode", "PERMISSIVE")

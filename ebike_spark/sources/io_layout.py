@@ -82,6 +82,7 @@ def _scratch_dir(tag: str) -> str:
     GROUP BY lang, source
     """,
     tags=("io", "layout", "partitioning"),
+    eager=True,
 )
 def io_partitioned_layout(spark: SparkSession, sf: str) -> DataFrame:
     """documents → partitionBy(lang) + sortWithinPartitions(doc_id) +
@@ -121,6 +122,7 @@ COMPACT_AFTER = 4  # range-compacted target file count
     FROM events
     """,
     tags=("io", "layout", "compaction"),
+    eager=True,
 )
 def io_compact_small_files(spark: SparkSession, sf: str) -> DataFrame:
     """Small-file compaction — the other half of the layout story: an
@@ -224,6 +226,7 @@ FROM nz
     "io_zorder_layout",
     oracle=_ZORDER_ORACLE,
     tags=("io", "layout", "zorder", "beyond-reference"),
+    eager=True,
 )
 def io_zorder_layout(spark: SparkSession, sf: str) -> DataFrame:
     """Z-ORDER clustering — the multi-dimensional half of the layout

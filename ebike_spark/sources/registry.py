@@ -14,9 +14,10 @@ from __future__ import annotations
 import os
 import tempfile
 import uuid
-import weakref
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ebike_spark.artifacts import memo
 
 TABLES = (
     "region",
@@ -149,17 +150,6 @@ def default_sf_dir() -> str:
     return os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-# session → {(sf_dir, table) → DataFrame}. A DataFrame is just a plan —
-# caching it skips the per-call file listing + footer schema read
-# (~50-100ms each) without pinning any data in memory. Keyed WEAKLY by
-# the session object (not id(spark): a GC'd session's id can be reused
-# by a new session, which would then be served a stale plan bound to
-# the dead session).
-_df_cache: "weakref.WeakKeyDictionary[SparkSession, dict[tuple[str, str], DataFrame]]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
 # Fact tables worth storing bucketed, and the key that co-locates their
 # heavyweight join/aggregation: orders⋈lineitem on the orderkey is the
 # one fact-fact join in the workload, and lineitem's per-order rollups
@@ -171,30 +161,24 @@ BUCKET_SPECS = {
     "lineitem": ("l_orderkey", 32),
 }
 
-# session → {sf_dir → database name}. Bucketing metadata lives in the
-# session catalog (in-memory catalog: per-session lifetime), so managed
-# copies are materialized once per (session, sf_dir) on first bucketed
-# load and reused by every later query in that session — modelling a
-# warehouse whose fact tables are STORED bucketed. The database gets an
-# explicit scratch LOCATION so no spark-warehouse dir appears in the
-# caller's cwd.
-_bucket_dbs: "weakref.WeakKeyDictionary[SparkSession, dict[str, str]]" = (
-    weakref.WeakKeyDictionary()
-)
+
+def _bucket_db(spark: SparkSession) -> str:
+    """A scratch database for bucketed copies. Bucketing metadata lives
+    in the session catalog (in-memory catalog: per-session lifetime),
+    so managed copies are materialized once per (session, sf_dir) on
+    first bucketed load and reused by every later query in that
+    session — modelling a warehouse whose fact tables are STORED
+    bucketed. The database gets an explicit scratch LOCATION so no
+    spark-warehouse dir appears in the caller's cwd."""
+    db = f"ebike_bkt_{uuid.uuid4().hex[:8]}"
+    loc = tempfile.mkdtemp(prefix=db + "_")
+    spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{loc}'")
+    return db
 
 
 def _bucketed_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     key, n_buckets = BUCKET_SPECS[name]
-    try:
-        dbs = _bucket_dbs.setdefault(spark, {})
-    except TypeError:  # pragma: no cover - session not weakref-able
-        dbs = {}
-    db = dbs.get(sf_dir)
-    if db is None:
-        db = f"ebike_bkt_{uuid.uuid4().hex[:8]}"
-        loc = tempfile.mkdtemp(prefix=db + "_")
-        spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{loc}'")
-        dbs[sf_dir] = db
+    db = memo(spark, ("bucket_db", sf_dir), lambda: _bucket_db(spark))
     tbl = f"{db}.{name}_b"
     if not spark.catalog.tableExists(tbl):
         (
@@ -205,6 +189,36 @@ def _bucketed_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             .saveAsTable(tbl)
         )
     return spark.table(tbl)
+
+
+def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    if name == "events":
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        df = spark.read.parquet(path)
+        from pyspark.sql import functions as F
+        from pyspark.sql import types as T
+
+        ts_type = df.schema["ts"].dataType
+        if isinstance(ts_type, (T.TimestampType, T.TimestampNTZType)):
+            # Current fixtures: timestamp[us]. Normalize to TimestampType
+            # (session tz is UTC, so values are unchanged; NTZ would
+            # forbid the epoch BIGINT casts used downstream).
+            df = df.withColumn("ts", F.col("ts").cast(T.TimestampType()))
+        elif isinstance(ts_type, T.LongType):
+            # Legacy fixtures: int64 nanos (read as long via the conf
+            # above); truncate to micros, matching DuckDB's TIMESTAMP_NS
+            # truncation.
+            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+        else:
+            raise TypeError(
+                f"events.ts has unsupported type {ts_type.simpleString()}; "
+                "expected timestamp, timestamp_ntz, or int64 nanos"
+            )
+    else:
+        df = spark.read.parquet(path)
+    _check_contract(name, df)
+    return df
 
 
 def load_table(
@@ -246,42 +260,9 @@ def load_table(
         if name not in BUCKET_SPECS:
             raise KeyError(f"no bucket layout for {name!r}; known: {sorted(BUCKET_SPECS)}")
         return _bucketed_table(spark, sf_dir, name)
-    try:
-        session_cache = _df_cache.setdefault(spark, {})
-    except TypeError:  # session object not weakref-able (never in practice)
-        session_cache = {}
-    key = (sf_dir, name)
-    cached = session_cache.get(key)
-    if cached is not None:
-        return cached
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-        from pyspark.sql import functions as F
-        from pyspark.sql import types as T
-
-        ts_type = df.schema["ts"].dataType
-        if isinstance(ts_type, (T.TimestampType, T.TimestampNTZType)):
-            # Current fixtures: timestamp[us]. Normalize to TimestampType
-            # (session tz is UTC, so values are unchanged; NTZ would
-            # forbid the epoch BIGINT casts used downstream).
-            df = df.withColumn("ts", F.col("ts").cast(T.TimestampType()))
-        elif isinstance(ts_type, T.LongType):
-            # Legacy fixtures: int64 nanos (read as long via the conf
-            # above); truncate to micros, matching DuckDB's TIMESTAMP_NS
-            # truncation.
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        else:
-            raise TypeError(
-                f"events.ts has unsupported type {ts_type.simpleString()}; "
-                "expected timestamp, timestamp_ntz, or int64 nanos"
-            )
-    else:
-        df = spark.read.parquet(path)
-    _check_contract(name, df)
-    session_cache[key] = df
-    return df
+    # a stored frame is only a plan: it skips the per-call file listing
+    # and footer schema read (~50-100 ms) and pins no data in memory
+    return memo(spark, ("table", sf_dir, name), lambda: _read_table(spark, sf_dir, name))
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -224,6 +224,7 @@ def stream_stream_interval_join(ev: DataFrame) -> DataFrame:
     "stream_tumbling_window",
     oracle=REGISTRY["ev_tumbling_window"].oracle,
     tags=("streaming", "window-agg"),
+    eager=True,
 )
 def stream_tumbling(spark: SparkSession, sf: str) -> DataFrame:
     """readStream → tumbling window agg → memory sink, drained over 4
@@ -238,6 +239,7 @@ def stream_tumbling(spark: SparkSession, sf: str) -> DataFrame:
     "stream_sliding_window",
     oracle=REGISTRY["ev_sliding_window"].oracle,
     tags=("streaming", "window-agg", "sliding"),
+    eager=True,
 )
 def stream_sliding(spark: SparkSession, sf: str) -> DataFrame:
     """readStream → sliding (1h / 30m) window agg → memory sink; final
@@ -258,6 +260,7 @@ def stream_sliding(spark: SparkSession, sf: str) -> DataFrame:
     SELECT event_type, COUNT(*) AS n FROM events GROUP BY event_type
     """,
     tags=("streaming", "dedup"),
+    eager=True,
 )
 def stream_dedup(spark: SparkSession, sf: str) -> DataFrame:
     """Streaming exact dedup: the staged files are replayed TWICE (every
@@ -285,6 +288,7 @@ def stream_dedup(spark: SparkSession, sf: str) -> DataFrame:
     FROM events GROUP BY user_id
     """,
     tags=("streaming", "stateful", "applyInPandasWithState"),
+    eager=True,
 )
 def stream_stateful(spark: SparkSession, sf: str) -> DataFrame:
     """Custom stateful streaming operator (applyInPandasWithState):
@@ -308,6 +312,7 @@ def stream_stateful(spark: SparkSession, sf: str) -> DataFrame:
     "stream_sessionize",
     oracle=REGISTRY["ev_sessionize"].oracle,
     tags=("streaming", "session-window"),
+    eager=True,
 )
 def stream_sessionize(spark: SparkSession, sf: str) -> DataFrame:
     """readStream → session_window agg → memory sink, then a batch
@@ -370,6 +375,7 @@ def funnel_stream(ev: DataFrame) -> DataFrame:
     "stream_funnel",
     oracle=REGISTRY["ev_funnel"].oracle,
     tags=("streaming", "stateful", "funnel", "applyInPandasWithState"),
+    eager=True,
 )
 def stream_funnel(spark: SparkSession, sf: str) -> DataFrame:
     """Streaming funnel: per-user stage state advanced across 4
@@ -406,6 +412,7 @@ def stream_funnel(spark: SparkSession, sf: str) -> DataFrame:
     GROUP BY 1, 2
     """,
     tags=("streaming", "join", "enrichment"),
+    eager=True,
 )
 def stream_static_join(spark: SparkSession, sf: str) -> DataFrame:
     """Stream-static enrichment join: the event stream joined to the
@@ -504,6 +511,7 @@ def scd2_stream(ev: DataFrame) -> DataFrame:
     FROM iv WHERE valid_to IS NOT NULL
     """,
     tags=("streaming", "stateful", "scd2", "applyInPandasWithState"),
+    eager=True,
 )
 def stream_scd2(spark: SparkSession, sf: str) -> DataFrame:
     """Streaming SCD2: per-user open-interval state advanced across 4
@@ -591,6 +599,7 @@ def _merge_rollup_batch(target_dir: str):
     FROM events GROUP BY 1, 2
     """,
     tags=("streaming", "foreachBatch", "rollup", "incremental-view"),
+    eager=True,
 )
 def stream_rollup_maintain(spark: SparkSession, sf: str) -> DataFrame:
     """Incrementally MAINTAINED materialized rollup: the stream's 4
@@ -635,6 +644,7 @@ def stream_rollup_maintain(spark: SparkSession, sf: str) -> DataFrame:
      AND v.ts <= p.ts AND v.ts >= p.ts - INTERVAL 1 HOUR
     """,
     tags=("streaming", "stream-stream-join", "interval"),
+    eager=True,
 )
 def stream_interval_join(spark: SparkSession, sf: str) -> DataFrame:
     """Stream-STREAM interval join driven to completion: purchases ×
@@ -714,6 +724,7 @@ def gap_alert_stream(ev: DataFrame) -> DataFrame:
     FROM g WHERE t - prev_t > {GAP_ALERT_US} GROUP BY 1
     """,
     tags=("streaming", "stateful", "alerting", "applyInPandasWithState"),
+    eager=True,
 )
 def stream_gap_alerts(spark: SparkSession, sf: str) -> DataFrame:
     """Silence/gap alerting: a custom stateful operator carries each
@@ -807,6 +818,7 @@ def attribution_stream(ev: DataFrame) -> DataFrame:
     "stream_attribution_last_touch",
     oracle=REGISTRY["ev_attribution_last_touch"].oracle,
     tags=("streaming", "stateful", "attribution", "applyInPandasWithState"),
+    eager=True,
 )
 def stream_attribution_last_touch(spark: SparkSession, sf: str) -> DataFrame:
     """Streaming last-touch attribution: per-user (last touch time,
@@ -887,6 +899,7 @@ def first_seen_stream(ev: DataFrame) -> DataFrame:
     "stream_new_vs_returning",
     oracle=REGISTRY["ev_new_vs_returning"].oracle,
     tags=("streaming", "stateful", "applyInPandasWithState", "active-users"),
+    eager=True,
 )
 def stream_new_vs_returning(spark: SparkSession, sf: str) -> DataFrame:
     """Streaming twin of ev_new_vs_returning: the per-user first-seen
@@ -966,6 +979,7 @@ CDC_STATE_SCHEMA = "t long, eid long, typ string, cents long"
     FROM latest WHERE rn = 1 AND event_type != 'error'
     """,
     tags=("streaming", "stateful", "cdc", "applyInPandasWithState"),
+    eager=True,
 )
 def stream_cdc_upsert(spark: SparkSession, sf: str) -> DataFrame:
     """CDC changelog apply: the event stream is read as a change feed
@@ -1017,6 +1031,7 @@ def stream_cdc_upsert(spark: SparkSession, sf: str) -> DataFrame:
     "stream_error_budget_burn",
     oracle=REGISTRY["ev_error_budget_burn"].oracle,
     tags=("streaming", "window-agg", "sre", "alerting"),
+    eager=True,
 )
 def stream_error_budget_burn(spark: SparkSession, sf: str) -> DataFrame:
     """Streaming twin of the SRE burn alert: the hourly SLI counters
@@ -1098,6 +1113,7 @@ LIFECYCLE_STATE_SCHEMA = "ft long, lt long, n long"
     "stream_lifecycle_stages",
     oracle=REGISTRY["ev_lifecycle_stages"].oracle,
     tags=("streaming", "stateful", "applyInPandasWithState", "lifecycle"),
+    eager=True,
 )
 def stream_lifecycle_stages(spark: SparkSession, sf: str) -> DataFrame:
     """Streaming twin of ev_lifecycle_stages (VERDICT-r6 task 6): the

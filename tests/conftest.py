@@ -18,7 +18,7 @@ from ebike_spark.sources.registry import TABLES  # noqa: E402
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("ebike_spark_tests", cpus=8)
+    s = get_spark("ebike_spark_tests")
     s.sparkContext.setLogLevel("ERROR")
     yield s
 

@@ -459,16 +459,79 @@ def test_quantize_error_bounded_by_half_scale(spark):
 
 def test_persist_scoped_reuses_identical_plan_rebuilds_on_change(spark):
     """Same (session, tag) + same plan → the warm cache object is
-    served; a different plan under the tag → rebuild, never stale."""
-    from ebike_spark.operators.dedup import _persist_scoped
+    served; a different plan under the tag → rebuild, never stale, and
+    the replaced frame is unpersisted: the session holds one cached
+    RDD per tag, however often the tag is replaced."""
+    from ebike_spark.artifacts import persisted
 
-    c1 = _persist_scoped(spark, "unit_test_tag", spark.range(10).selectExpr("id*2 AS x"))
+    jsc = spark.sparkContext._jsc
+    c1 = persisted(spark, "unit_test_tag", spark.range(10).selectExpr("id*2 AS x"))
     assert c1.count() == 10
-    c2 = _persist_scoped(spark, "unit_test_tag", spark.range(10).selectExpr("id*2 AS x"))
+    live = jsc.getPersistentRDDs().size()
+    c2 = persisted(spark, "unit_test_tag", spark.range(10).selectExpr("id*2 AS x"))
     assert c2 is c1
-    c3 = _persist_scoped(spark, "unit_test_tag", spark.range(11).selectExpr("id*2 AS x"))
+    c3 = persisted(spark, "unit_test_tag", spark.range(11).selectExpr("id*2 AS x"))
     assert c3 is not c1 and c3.count() == 11
+    assert jsc.getPersistentRDDs().size() == live
     c3.unpersist()
+
+
+def test_store_keys_on_session_and_result_confs(spark):
+    """An artifact stored in one session is never served to
+    ``spark.newSession()``, and a flip of the time zone or of ANSI mode
+    misses, for memoized values and keyed persisted frames alike;
+    restoring the conf finds the original entry again."""
+    from ebike_spark.artifacts import memo, persisted
+
+    builds = []
+
+    def build():
+        builds.append(len(builds) + 1)
+        return builds[-1]
+
+    def frame():
+        return spark.range(3)
+
+    key = ("unit_test_store", SF_DIR)
+    assert memo(spark, key, build) == 1
+    cached = persisted(spark, "unit_test_store", frame, key=SF_DIR)
+    assert memo(spark, key, build) == 1
+    assert persisted(spark, "unit_test_store", frame, key=SF_DIR) is cached
+    child = spark.newSession()
+    assert memo(child, key, build) == 2
+    assert persisted(child, "unit_test_store", frame, key=SF_DIR) is not cached
+    for conf, flipped, n in (
+        ("spark.sql.session.timeZone", "America/Los_Angeles", 3),
+        ("spark.sql.ansi.enabled", "true", 4),
+    ):
+        before = spark.conf.get(conf)
+        spark.conf.set(conf, flipped)
+        try:
+            assert memo(spark, key, build) == n, conf
+            assert persisted(spark, "unit_test_store", frame, key=SF_DIR) is not cached, conf
+        finally:
+            spark.conf.set(conf, before)
+    assert memo(spark, key, build) == 1
+    for p in (child, spark):
+        persisted(p, "unit_test_store", frame, key=SF_DIR).unpersist()
+
+
+def test_band_index_rebuilt_when_its_directory_is_deleted(spark):
+    """The persisted LSH band index is memoized per (session, corpus)
+    with a directory re-check: deleting the directory makes the next
+    lookup rebuild it instead of handing out a path that no longer
+    exists."""
+    import os
+    import shutil
+
+    from ebike_spark.operators.dedup import _lsh_band_index
+
+    path, cutoff = _lsh_band_index(spark, SF_DIR)
+    assert _lsh_band_index(spark, SF_DIR) == (path, cutoff)
+    shutil.rmtree(path)
+    rebuilt, again = _lsh_band_index(spark, SF_DIR)
+    assert rebuilt != path and os.path.isdir(rebuilt) and again == cutoff
+    assert spark.read.parquet(rebuilt).count() > 0
 
 
 def test_range_join_boundaries_and_overlaps(spark):
@@ -1371,15 +1434,15 @@ def test_pagerank_states_mass_and_determinism(spark):
 @pytest.mark.slow
 def test_session_caches_key_on_sf_dir(spark):
     """Cross-SF cache keying: the battery plan cache (per (name,
-    sf_dir)) and every _persist_scoped intermediate (keyed by sf) must
+    sf_dir)) and every persisted intermediate (keyed by sf) must
     never leak one fixture's data into another's result when a single
     session alternates scale factors — the exact access pattern the
     bench/driver session produces. Runs each cache-heavy query at
     sf0.001 → sf0.01 → sf0.001 and requires the third read to equal
     the first exactly."""
-    from ebike_spark.plans.registry import REGISTRY, _load_all, _plan_cached
+    from ebike_spark.plans.registry import all_queries
 
-    _load_all()
+    queries = all_queries()
     other = "/root/testdata/sf0.01"
     if other.rstrip("/") == SF_DIR.rstrip("/"):
         # suite running under the EBIKE_TEST_SF_DIR override: pick a
@@ -1393,7 +1456,7 @@ def test_session_caches_key_on_sf_dir(spark):
         "text_fuzzy_variants",
         "ev_active_users_hll",
     ):
-        fn = _plan_cached(name, REGISTRY[name].fn)
+        fn = queries[name]
         first = sorted(map(tuple, fn(spark, SF_DIR).collect()))
         mid = sorted(map(tuple, fn(spark, other).collect()))
         again = sorted(map(tuple, fn(spark, SF_DIR).collect()))
@@ -1403,6 +1466,36 @@ def test_session_caches_key_on_sf_dir(spark):
         # middle run really read the other fixture)
         if name == "ev_active_users_hll":
             assert mid != first, name
+
+
+@pytest.mark.slow
+def test_plan_cached_queries_build_without_jobs(spark):
+    """all_queries() plan-caches every query not declared eager, so
+    building such a query must run no Spark work once its session
+    artifacts are warm: the second build starts zero jobs. A query that
+    computes while it is built is eager and must say so at @register,
+    or the bench's timed runs would count a cached result instead of
+    re-running the work."""
+    from ebike_spark.plans.registry import REGISTRY, _load_all
+
+    _load_all()
+    sc = spark.sparkContext
+    started = {}
+    for name, spec in sorted(REGISTRY.items()):
+        if spec.eager:
+            continue
+        spec.fn(spark, SF_DIR)  # warm its session artifacts
+        group = f"rebuild_{name}"
+        sc.setJobGroup(group, name)
+        try:
+            spec.fn(spark, SF_DIR)
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        if jobs:
+            started[name] = len(jobs)
+    assert not started, f"building these started Spark jobs; declare them eager: {started}"
 
 
 # ------------------------------------------------- local_df primitive

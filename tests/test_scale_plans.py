@@ -1201,12 +1201,12 @@ def test_bpe_iteration_is_vocab_sized_and_cached(spark):
     and the argmax is TakeOrdered(1), not a full sort."""
     import pyspark.sql.functions as F
 
-    from ebike_spark.operators.dedup import _persist_scoped
+    from ebike_spark.artifacts import persisted
     from ebike_spark.operators.text_late import _bpe_pair_count_step
     from ebike_spark.plans.registry import REGISTRY
 
     REGISTRY["text_bpe_learn_merges"].fn(spark, SF_DIR).collect()
-    vocab = _persist_scoped(
+    vocab = persisted(
         spark, "bpe_vocab", lambda: (_ for _ in ()).throw(AssertionError(
             "vocab must be a cache hit after the operator ran"
         )), key=SF_DIR,
@@ -1436,7 +1436,17 @@ def test_survivor_membership_attach_is_broadcast(spark):
     without the r14 broadcast hint the planner sized it at
     defaultSizeInBytes and staged a full SortMergeJoin (two exchanges +
     sorts) against the documents side. The hint pins the only shape that
-    is sane at 100 TB: stream the big side, broadcast the bounded one."""
+    is sane at 100 TB: stream the big side, broadcast the bounded one.
+
+    Asserted with InMemoryRelation subtrees stripped, by choice: on the
+    driver union-find path this query's plan persists nothing (the
+    membership frame is a local literal frame and the persisted
+    cluster edges are collected, not joined), so a cached subtree in
+    the render can only be another query's persisted frame that the
+    shared cache manager substituted for a matching sub-plan. That
+    frame's build lineage, join strategy included, belongs to the query
+    that persisted it; a SortMergeJoin inside it says nothing about
+    this attach."""
     plan = _strip_cached_subtrees(
         _physical(REGISTRY["corpus_dedup_survivor"].fn(spark, SF_DIR))
     )

@@ -32,6 +32,7 @@ import pyspark.sql.functions as F  # noqa: E402
 from pyspark.sql import DataFrame  # noqa: E402
 
 from bench import host_canary  # noqa: E402
+from ebike_spark.artifacts import persisted  # noqa: E402
 from ebike_spark.session import get_spark  # noqa: E402
 
 
@@ -41,17 +42,16 @@ def _ppjoin_arms(spark, sf):
     from ebike_spark.operators.dedup import (
         PPJOIN_T_DEN,
         PPJOIN_T_NUM,
-        _persist_scoped,
         _ppjoin_candidates,
         _ppjoin_index,
         ppjoin_pairs,
         shingle_set,
     )
 
-    sh = _persist_scoped(
+    sh = persisted(
         spark, "ngram_shingles", lambda: shingle_set(spark, sf), key=sf
     )
-    idx = _persist_scoped(
+    idx = persisted(
         spark, "ppjoin_index", lambda: _ppjoin_index(sh), key=sf
     )
 
@@ -160,9 +160,9 @@ def _cc_star_generic(edges: DataFrame, round_fn, max_iter: int = 50):
 
 def _starcc_arms(spark, sf, fused_pairs: bool):
     from ebike_spark.operators.corpus import _large_star, _small_star
-    from ebike_spark.operators.dedup import minhash_verified_pairs, _persist_scoped
+    from ebike_spark.operators.dedup import minhash_verified_pairs
 
-    edges = _persist_scoped(
+    edges = persisted(
         spark,
         "ab_scale_edges",
         lambda: minhash_verified_pairs(spark, sf).select("d1", "d2"),
